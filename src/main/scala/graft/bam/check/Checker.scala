@@ -227,27 +227,45 @@ final class Checker(blocks: BlockReader, contigLengths: IndexedSeq[Int],
   }
 }
 
-/** Brute-force scan for the first BGZF block boundary at-or-after a byte
-  * offset: candidate accepted when `blocksToCheck` consecutive headers chain
-  * (reference: bgzf/.../FindBlockStart.scala:8-36). */
+/** Scan for the first BGZF block boundary at-or-after a byte offset:
+  * candidate accepted when `blocksToCheck` consecutive headers chain
+  * (reference: bgzf/.../FindBlockStart.scala:8-36).
+  *
+  * One call costs one positioned read of the candidate window
+  * ([[BlockReader.fillWindow]]: the `MaxBlockSize` candidates and the
+  * header bytes of the last one), in which every candidate's own header is
+  * parsed. Only a chain hop whose header does not lie wholly inside the
+  * window reads again, 18 bytes through [[BlockReader.blockSizeAt]]; a
+  * header that would run past the end of the file is rejected unread, as
+  * that read would come back short. So a split start costs at most
+  * `blocksToCheck` reads here on a well-formed file. */
 object FindBlockStart {
   def apply(blocks: BlockReader, start: Long, blocksToCheck: Int = 5): Long = {
-    val end = math.min(blocks.fileLength, start + Bgzf.MaxBlockSize)
+    val fileLength = blocks.fileLength
+    val end = math.min(fileLength, start + Bgzf.MaxBlockSize)
+    val window = blocks.window
+    val inWindow = blocks.fillWindow(start)
+    def blockSizeAt(pos: Long): Int = {
+      val i = pos - start
+      if (i + Bgzf.HeaderSize <= inWindow) Bgzf.checkHeader(window, i.toInt, Bgzf.HeaderSize)
+      else if (pos + Bgzf.HeaderSize > fileLength) -1
+      else blocks.blockSizeAt(pos)
+    }
     var c = start
     while (c < end) {
       var pos = c
       var ok = 0
       var chained = true
-      while (chained && ok < blocksToCheck && pos < blocks.fileLength) {
-        val size = blocks.blockSizeAt(pos)
+      while (chained && ok < blocksToCheck && pos < fileLength) {
+        val size = blockSizeAt(pos)
         if (size < 0) chained = false
         else { ok += 1; pos += size }
       }
       // Chain shorter than blocksToCheck is fine if it ran into clean EOF.
-      if (chained && (ok == blocksToCheck || pos >= blocks.fileLength)) return c
+      if (chained && (ok == blocksToCheck || pos >= fileLength)) return c
       c += 1
     }
-    blocks.fileLength
+    fileLength
   }
 }
 
@@ -269,20 +287,21 @@ object FindRecordStart {
     var scanned = 0
     var block = blockStart
     while (scanned < maxReadSize) {
-      val meta = blocks.metadataAt(block) match {
-        case Some(m) => m
+      // blockAt skips interior EOF markers: probe offsets within the block
+      // it actually found, and advance from there. The block is inflated
+      // and cached here, so the checker's probes of it read nothing more.
+      val b = blocks.blockAt(block) match {
+        case Some(b) => b
         case None    => return None
       }
-      // metadataAt skips interior EOF markers: probe offsets within the
-      // block it actually found, and advance from there
-      block = meta.start
+      block = b.start
       var off = 0
-      while (off < meta.uncompressedSize && scanned < maxReadSize) {
+      while (off < b.uncompressedSize && scanned < maxReadSize) {
         if (accept(Pos(block, off))) return Some(Pos(block, off))
         off += 1
         scanned += 1
       }
-      block += meta.compressedSize
+      block += b.compressedSize
     }
     None
   }

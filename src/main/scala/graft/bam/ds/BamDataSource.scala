@@ -3,6 +3,7 @@ package graft.bam.ds
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -44,7 +45,7 @@ object BamDataSource {
     * constructing readers directly). */
   def hadoopConf(): org.apache.hadoop.conf.Configuration =
     try org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    catch { case _: Throwable => new org.apache.hadoop.conf.Configuration() }
+    catch { case NonFatal(_) => new org.apache.hadoop.conf.Configuration() }
 
   /** Driver conf wrapped for shipping into executor closures — build it
     * DRIVER-SIDE (before mapPartitions / in the scan factory) so executors
@@ -139,7 +140,8 @@ class BamScanBuilder(paths: Seq[String], options: Map[String, String])
     * decodes a byte of BAM — the analog of parquet's metadata count.
     * PARTIAL pushdown (Spark sums the per-file partial rows), so it
     * composes with multi-path reads. Refused when any filter is present
-    * (residual rows would be wrong) or any input lacks its side-car. */
+    * (residual rows would be wrong) or any input lacks a current side-car
+    * ([[BamCountScan.sidecarCurrent]]). */
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     countPushed = canPushCount(agg)
@@ -153,10 +155,7 @@ class BamScanBuilder(paths: Seq[String], options: Map[String, String])
       agg.aggregateExpressions.length == 1 &&
       agg.aggregateExpressions.head
         .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar] &&
-      paths.forall { p =>
-        val hp = new org.apache.hadoop.fs.Path(p + ".records")
-        hp.getFileSystem(conf).exists(hp)
-      }
+      paths.forall(BamCountScan.sidecarCurrent(_, conf))
   }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -229,6 +228,56 @@ object BamCountScan {
   /** Side-car bytes per count task — small enough to parallelize a
     * data-sized side-car, large enough that task overhead stays noise. */
   val SplitSize: Long = 32L << 20
+
+  /** Whether `path`'s `.records` side-car may answer COUNT(*): it exists,
+    * is not older than the BAM, and its last entry is the BAM's last
+    * record — the eager checker accepts that position and the stream ends
+    * right after the record there. A BAM rewritten in place, or a
+    * side-car cut short or copied from another file, fails one of these
+    * and the count decodes instead. Costs the side-car's tail and a few
+    * block reads of the BAM. */
+  def sidecarCurrent(path: String, conf: org.apache.hadoop.conf.Configuration): Boolean = {
+    val bam = new org.apache.hadoop.fs.Path(path)
+    val rec = new org.apache.hadoop.fs.Path(path + ".records")
+    val fs = rec.getFileSystem(conf)
+    if (!fs.exists(rec)) return false
+    val recStatus = fs.getFileStatus(rec)
+    recStatus.getModificationTime >= fs.getFileStatus(bam).getModificationTime &&
+      lastEntry(fs, rec, recStatus.getLen).exists(endsAt(path, conf, _))
+  }
+
+  /** The last `blockPos,offset` line of a side-car, read from its tail. */
+  private def lastEntry(fs: org.apache.hadoop.fs.FileSystem,
+                        rec: org.apache.hadoop.fs.Path, len: Long): Option[graft.bam.codec.Pos] = {
+    val tail = new Array[Byte](math.min(len, 64L).toInt)
+    val in = fs.open(rec)
+    try in.readFully(len - tail.length, tail) finally in.close()
+    val lines = new String(tail, "ASCII").split('\n').filter(_.nonEmpty)
+    lines.lastOption.flatMap { l =>
+      l.split(',') match {
+        case Array(b, o) =>
+          try Some(graft.bam.codec.Pos(b.trim.toLong, o.trim.toInt))
+          catch { case _: NumberFormatException => None }
+        case _ => None
+      }
+    }
+  }
+
+  /** True iff a record the eager checker accepts starts at `last` and the
+    * BAM's stream ends right after it. */
+  private def endsAt(path: String, conf: org.apache.hadoop.conf.Configuration,
+                     last: graft.bam.codec.Pos): Boolean = {
+    val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(path, conf))
+    try {
+      val r = new graft.bam.io.UncompressedReader(blocks)
+      if (!r.seek(graft.bam.codec.Pos(0, 0))) return false
+      val lens = graft.bam.codec.Bam.readHeader(r).contigs.map(_.length)
+      new graft.bam.check.Checker(blocks, lens).eager(last) && r.seek(last) && {
+        val size = r.readIntLE()
+        size >= 0 && r.skip(size) == size && !r.hasMore
+      }
+    } finally blocks.close()
+  }
 }
 
 final case class BamCountPartition(path: String, start: Long, end: Long,
@@ -353,7 +402,7 @@ class BamScan(paths: Seq[String], required: StructType,
       }
       val locality = new Locality(
         try fs.getFileBlockLocations(status, 0, status.getLen)
-        catch { case _: Throwable => Array.empty[org.apache.hadoop.fs.BlockLocation] })
+        catch { case NonFatal(_) => Array.empty[org.apache.hadoop.fs.BlockLocation] })
       def hostsFor(s: Long, e: Long): Array[String] = locality.hostsFor(s, e)
 
       // index pruning: engine `.gri` side-car first, standard `.bai` else
@@ -402,7 +451,7 @@ object BamScan {
         val hp = new org.apache.hadoop.fs.Path(p)
         val st = hp.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(hp)
         (p, st.getModificationTime, st.getLen)
-      } catch { case _: Throwable => (p, 0L, 0L) }
+      } catch { case NonFatal(_) => (p, 0L, 0L) }
       dictCache.computeIfAbsent(key, { _ =>
         val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(p))
         try {

@@ -7,12 +7,23 @@ import graft.bam.codec.{Bgzf, Pos}
   * The cache matters because the record-boundary checkers re-visit the same
   * blocks many times while probing candidate positions (reference keeps a
   * 100-entry cache for the same reason: bgzf/.../block/Stream.scala:83-110).
+  *
+  * Resolving one split start costs a handful of positioned reads: one
+  * [[fillWindow]] for the block-boundary search (plus one 18-byte header
+  * read per chain hop past the window), then one header read and one block
+  * read for each block [[blockAt]] inflates while the record-boundary
+  * search probes it — cached blocks cost none.
   * One instance per task/partition; not thread-safe.
   */
 final class BlockReader(in: SeekableInput, cacheSize: Int = 64) extends AutoCloseable {
 
   private val headerBuf = new Array[Byte](Bgzf.HeaderSize)
   private val blockBuf = new Array[Byte](Bgzf.MaxBlockSize)
+
+  /** The block-boundary search window: every header that starts among the
+    * `MaxBlockSize` candidate offsets of one search lies wholly inside it.
+    * Filled by [[fillWindow]]. */
+  val window = new Array[Byte](Bgzf.MaxBlockSize + Bgzf.HeaderSize - 1)
 
   private val cache =
     new java.util.LinkedHashMap[Long, Bgzf.Block](cacheSize * 2, 0.75f, true) {
@@ -28,6 +39,13 @@ final class BlockReader(in: SeekableInput, cacheSize: Int = 64) extends AutoClos
     if (n < Bgzf.HeaderSize) -1 else Bgzf.checkHeader(headerBuf, 0, n)
   }
 
+  /** Fill [[window]] with the file's bytes from `start` in one positioned
+    * read; returns the count read (short only at end of file). */
+  def fillWindow(start: Long): Int =
+    if (start >= fileLength) 0
+    else in.readFullyAt(start, window, 0,
+      math.min(window.length.toLong, fileLength - start).toInt)
+
   /** First non-empty block metadata at-or-after `start` without inflating;
     * None at end of stream or invalid header. Empty members are SKIPPED,
     * not treated as end-of-stream: BGZF is closed under concatenation
@@ -38,9 +56,9 @@ final class BlockReader(in: SeekableInput, cacheSize: Int = 64) extends AutoClos
   def metadataAt(start0: Long): Option[Bgzf.Metadata] = {
     var start = start0
     while (true) {
-      // the boundary scan probes metadata then immediately inflates the
-      // same block through the checker — serve metadata from the payload
-      // cache so each probed block's compressed bytes are read ONCE
+      // a block already inflated by [[blockAt]] costs no read; a miss reads
+      // the header and the compressed block but caches neither, so callers
+      // that go on to inflate the block should walk with [[blockAt]]
       val hit = cache.get(start)
       if (hit != null)
         return Some(Bgzf.Metadata(hit.start, hit.compressedSize, hit.uncompressedSize))

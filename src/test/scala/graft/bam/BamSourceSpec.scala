@@ -108,6 +108,23 @@ class BamSourceSpec extends SparkTestBase {
     assert(bothPlan.contains("bam-count"), bothPlan)
   }
 
+  test("count(*) decodes when the side-car no longer matches the BAM") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val tiny = BamFixture.tiny
+    val dir = Files.createTempDirectory("graft-stale-count")
+    val bam = dir.resolve("reads.bam")
+    Files.copy(Paths.get(tiny.bamPath), bam)
+    Files.copy(Paths.get(tiny.recordsPath), dir.resolve("reads.bam.records"))
+    def countPlan = spark.read.format("bam").load(bam.toString)
+      .groupBy().count().queryExecution.executedPlan.toString
+    assert(countPlan.contains("bam-count"), countPlan)
+    assert(spark.read.format("bam").load(bam.toString).count() == tiny.numRecords)
+    // rewrite the BAM in place: the side-car now describes another file
+    Files.copy(Paths.get(fx.bamPath), bam, StandardCopyOption.REPLACE_EXISTING)
+    assert(!countPlan.contains("bam-count"), countPlan)
+    assert(spark.read.format("bam").load(bam.toString).count() == fx.numRecords)
+  }
+
   test("a data-sized side-car splits the pushed count into range tasks") {
     import graft.bam.ds.{BamCountScan, BamCountPartition, BamCountReaderFactory}
     val tmpDir = java.nio.file.Files.createTempDirectory("graft-countsplit")

@@ -1,6 +1,7 @@
 package graft.bam
 
 import graft.SparkTestBase
+import graft.bam.codec.Bgzf
 import graft.bam.fixtures.BamFixture
 import graft.bam.ops.{BamOps, SplitTiming}
 
@@ -13,6 +14,27 @@ class SplitTimingSpec extends SparkTestBase {
         .map(p => (p.blockPos, p.offset))
       val realized = BamOps.splits(spark, fx.bamPath, ss)
         .collect().map(r => (r.getLong(1), r.getInt(2))).toSeq
+      assert(harness == realized, s"splitSize=$ss")
+    }
+  }
+
+  test("computeSplits (eager) matches the realized layout on full-size blocks") {
+    // the shape of the reference's 1.bam (583 KB in 25 blocks of ~64 KiB
+    // payload): split windows end mid-block, the block-start search's
+    // header chains reach past its 64 KiB window, and the last split window
+    // runs past EOF
+    val fx = BamFixture.cached("wide", n = 8000, seed = 1, payloadSize = Bgzf.MaxPayload)
+    val len = new java.io.File(fx.bamPath).length
+    assert(fx.blocks.length >= 20)
+    Seq(65536L, 40001L).foreach { ss =>
+      assert(len % ss != 0, s"splitSize=$ss")
+      assert(fx.blocks.exists(b => b.start / ss != (b.start + b.compressedSize - 1) / ss),
+        s"splitSize=$ss")
+      val harness = SplitTiming.computeSplits(fx.bamPath, ss, relaxed = false)
+        .map(p => (p.blockPos, p.offset))
+      val realized = BamOps.splits(spark, fx.bamPath, ss)
+        .collect().map(r => (r.getLong(1), r.getInt(2))).toSeq
+      assert(harness.length > 1, s"splitSize=$ss")
       assert(harness == realized, s"splitSize=$ss")
     }
   }
