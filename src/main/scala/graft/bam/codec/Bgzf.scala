@@ -82,38 +82,43 @@ object Bgzf {
   /** Compress one payload slice into a complete BGZF block image. */
   def deflateBlock(data: Array[Byte], off: Int, len: Int,
                    level: Int = Deflater.DEFAULT_COMPRESSION): Array[Byte] = {
-    require(len <= MaxPayload, s"payload $len > $MaxPayload")
     val d = new Deflater(level, true)
-    val body = new Array[Byte](MaxBlockSize)
     try {
-      d.setInput(data, off, len)
-      d.finish()
-      var n = 0
-      while (!d.finished()) n += d.deflate(body, n, body.length - n)
-      val total = HeaderSize + n + FooterSize
-      require(total <= MaxBlockSize, s"compressed block $total > $MaxBlockSize")
-      val out = new Array[Byte](total)
-      // header
-      out(0) = 0x1f; out(1) = 0x8b.toByte; out(2) = 0x08; out(3) = 0x04
-      // mtime(4)=0, xfl=0, os=0xff
-      out(9) = 0xff.toByte
-      out(10) = 6 // xlen
-      out(12) = 'B'; out(13) = 'C'; out(14) = 2
-      val bsize = total - 1
-      out(16) = (bsize & 0xff).toByte
-      out(17) = ((bsize >> 8) & 0xff).toByte
-      System.arraycopy(body, 0, out, HeaderSize, n)
-      val crc = new CRC32
-      crc.update(data, off, len)
-      val c = crc.getValue
-      var p = HeaderSize + n
-      out(p) = (c & 0xff).toByte; out(p + 1) = ((c >> 8) & 0xff).toByte
-      out(p + 2) = ((c >> 16) & 0xff).toByte; out(p + 3) = ((c >> 24) & 0xff).toByte
-      p += 4
-      out(p) = (len & 0xff).toByte; out(p + 1) = ((len >> 8) & 0xff).toByte
-      out(p + 2) = ((len >> 16) & 0xff).toByte; out(p + 3) = ((len >> 24) & 0xff).toByte
-      out
+      val block = new Array[Byte](MaxBlockSize)
+      java.util.Arrays.copyOf(block, deflateInto(d, new CRC32, data, off, len, block))
     } finally d.end()
+  }
+
+  /** Compress one payload slice into `block` (>= [[MaxBlockSize]] bytes)
+    * as a complete BGZF block image with a fresh-state `d` and `crc`;
+    * returns the image's length. */
+  private def deflateInto(d: Deflater, crc: CRC32, data: Array[Byte], off: Int,
+                          len: Int, block: Array[Byte]): Int = {
+    require(len <= MaxPayload, s"payload $len > $MaxPayload")
+    d.setInput(data, off, len)
+    d.finish()
+    val end = MaxBlockSize - FooterSize
+    var p = HeaderSize
+    while (!d.finished() && p < end) p += d.deflate(block, p, end - p)
+    require(d.finished(), s"compressed block > $MaxBlockSize")
+    val total = p + FooterSize
+    // header
+    block(0) = 0x1f; block(1) = 0x8b.toByte; block(2) = 0x08; block(3) = 0x04
+    // mtime(4)=0, xfl=0, os=0xff
+    block(9) = 0xff.toByte
+    block(10) = 6 // xlen
+    block(12) = 'B'; block(13) = 'C'; block(14) = 2
+    val bsize = total - 1
+    block(16) = (bsize & 0xff).toByte
+    block(17) = ((bsize >> 8) & 0xff).toByte
+    crc.update(data, off, len)
+    val c = crc.getValue
+    block(p) = (c & 0xff).toByte; block(p + 1) = ((c >> 8) & 0xff).toByte
+    block(p + 2) = ((c >> 16) & 0xff).toByte; block(p + 3) = ((c >> 24) & 0xff).toByte
+    p += 4
+    block(p) = (len & 0xff).toByte; block(p + 1) = ((len >> 8) & 0xff).toByte
+    block(p + 2) = ((len >> 16) & 0xff).toByte; block(p + 3) = ((len >> 24) & 0xff).toByte
+    total
   }
 
   /** Chunk an uncompressed byte stream into BGZF block images + EOF marker.
@@ -146,12 +151,16 @@ object Bgzf {
     * not be materialized (BamSink shards: a rewrite partition at scale is
     * hundreds of MB of record bytes). Does NOT write the EOF marker —
     * BGZF is closed under concatenation and the final-file writer appends
-    * exactly one. */
+    * exactly one. One `Deflater` and one block buffer serve every member;
+    * `close` releases the `Deflater`. */
   final class StreamWriter(out: java.io.OutputStream,
                            payloadSize: Int = MaxPayload)
       extends java.io.OutputStream {
     require(payloadSize > 0 && payloadSize <= MaxPayload)
     private val buf = new Array[Byte](payloadSize)
+    private val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    private val crc = new CRC32
+    private val block = new Array[Byte](MaxBlockSize)
     private var n = 0
     private var nBlocks = 0L
     private var uncompressed = 0L
@@ -178,7 +187,9 @@ object Bgzf {
     }
 
     private def flushBlock(): Unit = if (n > 0) {
-      out.write(deflateBlock(buf, 0, n))
+      deflater.reset()
+      crc.reset()
+      out.write(block, 0, deflateInto(deflater, crc, buf, 0, n, block))
       nBlocks += 1
       uncompressed += n
       n = 0
@@ -187,6 +198,6 @@ object Bgzf {
     /** Flush the trailing partial block. Does not write Eof or close `out`. */
     def finish(): Unit = flushBlock()
 
-    override def close(): Unit = { finish(); out.close() }
+    override def close(): Unit = try finish() finally { deflater.end(); out.close() }
   }
 }

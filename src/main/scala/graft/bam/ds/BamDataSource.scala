@@ -342,7 +342,8 @@ class BamScan(paths: Seq[String], required: StructType,
   override def toBatch: Batch = this
 
   /** Planner statistics (drives join-strategy and AQE decisions): row
-    * count from the `.records` side-car when present (exact), else
+    * count from the `.records` side-car when every input has a current one
+    * ([[BamCountScan.sidecarCurrent]]; exact), else
     * estimated from compressed size at ~170 B/record; size = uncompressed
     * estimate (BGZF ≈ 3x compression on BAM payloads, the reference's own
     * published ratios). Catalyst treats a source without stats as
@@ -358,7 +359,7 @@ class BamScan(paths: Seq[String], required: StructType,
         val fs = hp.getFileSystem(conf)
         b += fs.getFileStatus(hp).getLen
         val rec = new org.apache.hadoop.fs.Path(p + ".records")
-        if (exact && fs.exists(rec)) {
+        if (exact && BamCountScan.sidecarCurrent(p, conf)) {
           val recLen = fs.getFileStatus(rec).getLen
           if (recLen <= (16L << 20)) { // exact count only for small side-cars
             val in = fs.open(rec)
@@ -437,7 +438,8 @@ object BamScan {
   // once per path in planInputPartitions (both driver-side, same process):
   // cache per path so each header is decoded once per JVM. Headers are a
   // few KB; eviction is not worth the code.
-  // keyed on (path, mtime, length) so an in-place rewrite invalidates
+  // keyed on (path, mtime, length) so an in-place rewrite invalidates; a
+  // path whose stat fails has no such key and is read uncached
   private val dictCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Map[String, Int]]()
 
@@ -447,12 +449,7 @@ object BamScan {
     * time — see BamScanBuilder.pushFilters. */
   def contigToIdx(paths: Seq[String]): Map[String, Int] =
     paths.headOption.map { p =>
-      val key = try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val st = hp.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(hp)
-        (p, st.getModificationTime, st.getLen)
-      } catch { case NonFatal(_) => (p, 0L, 0L) }
-      dictCache.computeIfAbsent(key, { _ =>
+      def read(): Map[String, Int] = {
         val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(p))
         try {
           val r = new graft.bam.io.UncompressedReader(blocks)
@@ -460,6 +457,12 @@ object BamScan {
           graft.bam.codec.Bam.readHeader(r)
             .contigs.zipWithIndex.map { case (c, i) => c.name -> i }.toMap
         } finally blocks.close()
-      })
+      }
+      val key = try {
+        val hp = new org.apache.hadoop.fs.Path(p)
+        val st = hp.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(hp)
+        Some((p, st.getModificationTime, st.getLen))
+      } catch { case NonFatal(_) => None }
+      key.fold(read())(dictCache.computeIfAbsent(_, _ => read()))
     }.getOrElse(Map.empty)
 }

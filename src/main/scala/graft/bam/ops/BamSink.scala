@@ -1,112 +1,103 @@
 package graft.bam.ops
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 import graft.bam.codec.{Bam, Bgzf}
+import graft.bam.ds.{BamDataSource, BamSchema}
 
 /** BAM writer sink (S16, the htsjdk-rewrite analog,
   * cli/.../bam/rewrite/HTSJDKRewrite.scala:21-93).
   *
-  * Scale design: BGZF is closed under concatenation, so each partition
-  * independently encodes its (sorted) records into a BGZF shard; the
-  * driver stitches header-shard + record-shards + EOF marker. On a real
-  * cluster the shards land on the DFS and a compose/concat finishes the
-  * file — no single-node encode bottleneck. Records are re-blocked
-  * without regard to boundaries, so output records are unaligned to block
-  * starts (what makes rewritten files useful checker tests).
+  * Scale design: one narrow pass, no sampling job and no shuffle. Scan
+  * partition i holds, in virtual-position order, the records that start in
+  * its byte range, so the partitions in index order are the file in order.
+  * Each task encodes its partition into its own BGZF shard and, BGZF being
+  * closed under concatenation, the driver stitches header-shard + record
+  * shards in NUMERIC partition order + EOF marker (path strings would put
+  * `shard-100000` before `shard-99999`). On a real cluster the shards land
+  * on the DFS and a compose/concat finishes the file — no single-node
+  * encode bottleneck. Records are re-blocked without regard to boundaries,
+  * so output records are unaligned to block starts (what makes rewritten
+  * files useful checker tests).
   */
 object BamSink {
 
-  private def rowToRecord(r: Row): Bam.Record = {
-    val cigar = r.getSeq[Row](r.fieldIndex("cigar"))
-      .map(c => Bam.CigarOp(c.getInt(0), c.getInt(1)))
-    Bam.Record(
-      refIdx = r.getInt(r.fieldIndex("refIdx")),
-      pos = r.getInt(r.fieldIndex("pos")),
-      mapq = r.getInt(r.fieldIndex("mapq")),
-      flags = r.getInt(r.fieldIndex("flags")),
-      readName = r.getString(r.fieldIndex("readName")),
-      cigar = cigar,
-      nextRefIdx = r.getInt(r.fieldIndex("nextRefIdx")),
-      nextPos = r.getInt(r.fieldIndex("nextPos")),
-      templateLen = r.getInt(r.fieldIndex("templateLen")),
-      seq = r.getString(r.fieldIndex("seq")),
-      qual = r.getAs[Array[Byte]](r.fieldIndex("qual")),
-      attrs = r.getMap[String, String](r.fieldIndex("attrs")).toMap,
+  /** Uncompressed bytes per BGZF member written. */
+  private val PayloadSize = 16 * 1024
+
+  private val Array(oRef, oPos, oMapq, oFlags, oName, oCigar, oNextRef, oNextPos,
+      oTlen, oSeq, oQual, oAttrs) =
+    Array("refIdx", "pos", "mapq", "flags", "readName", "cigar", "nextRefIdx",
+      "nextPos", "templateLen", "seq", "qual", "attrs").map(BamSchema.schema.fieldIndex)
+
+  /** A full-schema scan row as a record, by the schema's fixed ordinals. */
+  private def toRecord(r: InternalRow): Bam.Record = {
+    val c = r.getArray(oCigar)
+    val m = r.getMap(oAttrs)
+    Bam.Record(r.getInt(oRef), r.getInt(oPos), r.getInt(oMapq), r.getInt(oFlags),
+      r.getUTF8String(oName).toString,
+      IndexedSeq.tabulate(c.numElements()) { i =>
+        val op = c.getStruct(i, 2); Bam.CigarOp(op.getInt(0), op.getInt(1))
+      },
+      r.getInt(oNextRef), r.getInt(oNextPos), r.getInt(oTlen),
+      r.getUTF8String(oSeq).toString, r.getBinary(oQual),
+      (0 until m.numElements()).map(i =>
+        m.keyArray.getUTF8String(i).toString -> m.valueArray.getUTF8String(i).toString).toMap,
       blockPos = -1, offset = -1)
   }
 
-  /** Write `reads` (full bam-source schema) as a BAM file. Records are
-    * globally ordered by `virtualPos` (stable round-trip order); shards
-    * are encoded per partition THROUGH THE HADOOP FILESYSTEM of the target
-    * path — on a cluster they land on the DFS next to the output, never on
-    * executor-local disk — and the driver stream-concatenates them (BGZF
-    * is closed under concatenation). */
-  def write(reads: DataFrame, header: Bam.Header, outPath: String,
-            payloadSize: Int = 16 * 1024): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val conf = graft.bam.ds.BamDataSource.hadoopConf()
+  /** Write the full-schema scan `reads` as a BAM file, partition by
+    * partition; `keep(i)` (when given) is the `[from, until)` slice of
+    * partition i's records to write. Shards are encoded THROUGH THE HADOOP
+    * FILESYSTEM of the target path — on a cluster they land on the DFS
+    * next to the output, never on executor-local disk. */
+  private def write(reads: DataFrame, header: Bam.Header, outPath: String,
+                    keep: Option[Array[(Int, Int)]]): Unit = {
+    val conf = BamDataSource.hadoopConf()
     val outP = new HPath(outPath)
     val fs = outP.getFileSystem(conf)
     val shardDir = new HPath(
       outPath + s".shards-${java.util.UUID.randomUUID().toString.take(8)}")
     fs.mkdirs(shardDir)
-    val contigs = header.contigs
-    val text = header.text
-    val ps = payloadSize
     val shardDirS = shardDir.toString
     // Ship the DRIVER's Hadoop conf (incl. spark.hadoop.* session settings,
     // e.g. object-store credentials) to the executors: a bare executor-side
     // `new Configuration()` only sees classpath XML, which diverges from the
     // driver on conf-configured clusters.
     val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    val shards = reads
-      .repartitionByRange(
-        math.max(1, reads.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt / 2),
-        col("virtualPos.blockPos"), col("virtualPos.offset"))
-      .sortWithinPartitions("virtualPos.blockPos", "virtualPos.offset")
-      .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          // attempt-unique shard path = the task-commit protocol: a
-          // speculative or retried attempt writes its OWN file, the driver
-          // concatenates only the paths returned by the attempts whose
-          // results Spark actually collected (exactly one per partition),
-          // and loser/zombie files die with the shard dir. A shared
-          // per-partition path would let a zombie attempt keep writing
-          // into a file the driver is reading — torn output.
-          val shard = new HPath(
-            f"$shardDirS/shard-$pid%05d-attempt-${tc.taskAttemptId()}")
-          val sfs = shard.getFileSystem(serConf.value)
-          val os = new java.io.BufferedOutputStream(sfs.create(shard, true), 1 << 20)
-          // Stream-compress: one BGZF member per <= payloadSize bytes AS
-          // ROWS ARRIVE. Peak task heap is O(payloadSize + one record),
-          // not O(partition) — a rewrite partition at 100x is hundreds of
-          // MB of uncompressed record bytes and must never be buffered.
-          // No EOF member here; the driver appends exactly one.
-          val bw = new Bgzf.StreamWriter(os, ps)
-          try {
-            rows.foreach(r => Bam.writeRecord(bw, rowToRecord(r)))
-            bw.finish()
-          } finally os.close()
-          Iterator.single(shard.toString)
-        }
-      }(org.apache.spark.sql.Encoders.STRING)
-      .collect()
-      .sorted
+    val shards = reads.queryExecution.toRdd.mapPartitionsWithIndex { (pid, all) =>
+      val rows = keep.fold(all) { k => val (from, until) = k(pid); all.slice(from, until) }
+      if (!rows.hasNext) Iterator.empty
+      else {
+        // attempt-unique shard path = the task-commit protocol: a
+        // speculative or retried attempt writes its OWN file, the driver
+        // concatenates only the paths returned by the attempts whose
+        // results Spark actually collected (exactly one per partition),
+        // and loser/zombie files die with the shard dir. A shared
+        // per-partition path would let a zombie attempt keep writing
+        // into a file the driver is reading — torn output.
+        val shard = new HPath(f"$shardDirS/shard-$pid%05d-attempt-${
+          org.apache.spark.TaskContext.get().taskAttemptId()}")
+        val sfs = shard.getFileSystem(serConf.value)
+        // Stream-compress: one BGZF member per <= PayloadSize bytes AS
+        // ROWS ARRIVE. Peak task heap is O(payloadSize + one record),
+        // not O(partition). No EOF member here; the driver appends one.
+        val bw = new Bgzf.StreamWriter(
+          new java.io.BufferedOutputStream(sfs.create(shard, true), 1 << 20), PayloadSize)
+        try rows.foreach(r => Bam.writeRecord(bw, toRecord(r))) finally bw.close()
+        Iterator.single(pid -> shard.toString)
+      }
+    }.collect().sortBy(_._1)
 
     val out = new java.io.BufferedOutputStream(fs.create(outP, true), 1 << 20)
     try {
       val hdr = new java.io.ByteArrayOutputStream()
-      Bam.writeHeader(hdr, text, contigs)
-      val (hImg, _) = Bgzf.compress(hdr.toByteArray, ps)
+      Bam.writeHeader(hdr, header.text, header.contigs)
+      val (hImg, _) = Bgzf.compress(hdr.toByteArray, PayloadSize)
       out.write(hImg, 0, hImg.length - Bgzf.Eof.length)
-      shards.foreach { p =>
+      shards.foreach { case (_, p) =>
         val in = fs.open(new HPath(p))
         try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
         finally in.close()
@@ -117,7 +108,10 @@ object BamSink {
   }
 
   /** The rewrite app: read a BAM, optionally keep a record-index range
-    * [lo, hi) in file order (P9 row-number selection), write it back.
+    * [lo, hi) in file order (P9 row-number selection), write it back. The
+    * scan's split size fills the cluster's cores (8 MiB at most, 64 KiB at
+    * least); with a range, one count job over the same partitions gives
+    * each partition's first record index.
     *
     * Re-index options (reference parity: HTSJDKRewrite.scala:21-93 takes
     * `-b` indexBlocks / `-i` indexRecords to index its output):
@@ -133,24 +127,27 @@ object BamSink {
               index: Boolean = false,
               indexBlocks: Boolean = false,
               indexRecords: Boolean = false): Unit = {
-    val reads = spark.read.format("bam").load(inPath)
-    val selected = range match {
-      case None => reads
-      case Some((lo, hi)) =>
-        graft.ops.ScalableWindow.rowNumber(reads,
-          Seq("virtualPos.blockPos", "virtualPos.offset"), "__rn")
-          .filter(col("__rn") > lo && col("__rn") <= hi)
-          .drop("__rn")
+    val inP = new HPath(inPath)
+    val len = inP.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(inP).getLen
+    val cores = spark.sparkContext.defaultParallelism
+    val splitSize = math.min(8L << 20, math.max(64L << 10, (len + cores - 1) / cores))
+    def reads() = spark.read.format("bam").option("splitSize", splitSize).load(inPath)
+    val keep = range.map { case (lo, hi) =>
+      val counts = reads().select("refIdx").queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(rows.size.toLong)).collect()
+      counts.zip(counts.scanLeft(0L)(_ + _)).map { case (n, first) =>
+        def clip(g: Long) = math.min(math.max(g - first, 0L), n).toInt
+        (clip(lo), clip(hi))
+      }
     }
-    val blocks = new graft.bam.io.BlockReader(
-      graft.bam.io.SeekableInput.open(inPath))
+    val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(inPath))
     val header =
       try {
         val r = new graft.bam.io.UncompressedReader(blocks)
         r.seek(graft.bam.codec.Pos(0, 0))
         Bam.readHeader(r)
       } finally blocks.close()
-    write(selected, header, outPath)
+    write(reads(), header, outPath, keep)
     if (indexBlocks) BamOps.indexBlocks(spark, outPath, outPath + ".blocks")
     if (indexRecords) BamOps.indexRecords(spark, outPath, outPath + ".records")
     if (index) BamOps.indexBai(spark, outPath)

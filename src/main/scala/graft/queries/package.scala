@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -64,8 +66,9 @@ package object queries {
           java.nio.file.Files.walk(d).iterator().asScala.toSeq
             .sortBy(-_.getNameCount)
             .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-              catch { case _: Throwable => })
-        } catch { case _: Throwable => }
+              catch { case NonFatal(e) =>
+                System.err.println(s"scratch sweep: cannot delete $p: $e") })
+        } catch { case NonFatal(e) => System.err.println(s"scratch sweep: cannot walk $d: $e") }
       }
     private lazy val hook: Unit = Runtime.getRuntime.addShutdownHook(
       new Thread(() => sweep(), "graft-scratch-sweep"))

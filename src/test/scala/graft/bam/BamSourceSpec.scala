@@ -125,6 +125,43 @@ class BamSourceSpec extends SparkTestBase {
     assert(spark.read.format("bam").load(bam.toString).count() == fx.numRecords)
   }
 
+  test("planner statistics ignore a side-car that no longer matches the BAM") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val tiny = BamFixture.tiny
+    val dir = Files.createTempDirectory("graft-stale-stats")
+    val bam = dir.resolve("reads.bam")
+    Files.copy(Paths.get(tiny.bamPath), bam)
+    Files.copy(Paths.get(tiny.recordsPath), dir.resolve("reads.bam.records"))
+    def rows = new graft.bam.ds.BamScan(Seq(bam.toString), graft.bam.ds.BamSchema.schema,
+      Map.empty).estimateStatistics().numRows().getAsLong
+    assert(rows == tiny.numRecords)
+    // rewrite the BAM in place: the side-car now describes another file
+    Files.copy(Paths.get(fx.bamPath), bam, StandardCopyOption.REPLACE_EXISTING)
+    assert(rows != tiny.numRecords)
+    assert(rows == Files.size(bam) / 170, "falls back to the size estimate")
+  }
+
+  test("a header dictionary whose file cannot be stat'ed is read uncached") {
+    import java.nio.file.Files
+    import graft.bam.codec.{Bam, Bgzf}
+    val dir = Files.createTempDirectory("graft-dict-nostat")
+    def writeHeader(contig: String): Unit = {
+      val hdr = new java.io.ByteArrayOutputStream()
+      Bam.writeHeader(hdr, "", Seq(Bam.Contig(contig, 1000)))
+      Files.write(dir.resolve("h.bam"), Bgzf.compress(hdr.toByteArray)._1)
+    }
+    // a leading "//" reads as a URI authority to Hadoop, so the stat
+    // fails, while the local open of the same path succeeds
+    val p = "/" + dir.resolve("h.bam")
+    val hp = new org.apache.hadoop.fs.Path(p)
+    writeHeader("chrA")
+    assert(scala.util.Try(hp.getFileSystem(
+      graft.bam.ds.BamDataSource.hadoopConf()).getFileStatus(hp)).isFailure)
+    assert(graft.bam.ds.BamScan.contigToIdx(Seq(p)) == Map("chrA" -> 0))
+    writeHeader("chrB")
+    assert(graft.bam.ds.BamScan.contigToIdx(Seq(p)) == Map("chrB" -> 0))
+  }
+
   test("a data-sized side-car splits the pushed count into range tasks") {
     import graft.bam.ds.{BamCountScan, BamCountPartition, BamCountReaderFactory}
     val tmpDir = java.nio.file.Files.createTempDirectory("graft-countsplit")

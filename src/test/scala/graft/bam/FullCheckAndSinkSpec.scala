@@ -76,4 +76,35 @@ class FullCheckAndSinkSpec extends SparkTestBase {
     val want = fx.records.slice(10, 50).map(_.readName).sorted
     assert(names.toSeq == want)
   }
+
+  test("rewrite over several partitions keeps the source's exact record order") {
+    val fx = BamFixture.cached("wide", n = 8000, seed = 1,
+      payloadSize = graft.bam.codec.Bgzf.MaxPayload)
+    // the rewrite splits its input into max(64 KiB, len / cores) byte ranges
+    val len = new java.io.File(fx.bamPath).length
+    val cores = spark.sparkContext.defaultParallelism
+    val splitSize = math.max(64L << 10, (len + cores - 1) / cores)
+    assert((len + splitSize - 1) / splitSize >= 4, s"$len bytes in $splitSize-byte splits")
+    val dir = java.nio.file.Files.createTempDirectory("graft-rw-wide")
+    def rewritten(range: Option[(Long, Long)]): Vector[graft.bam.codec.Bam.Record] = {
+      val out = dir.resolve(s"out-${range.hashCode}.bam").toString
+      BamSink.rewrite(spark, fx.bamPath, out, range = range)
+      val blocks = new graft.bam.io.BlockReader(new graft.bam.io.LocalFileInput(out))
+      try {
+        val r = new graft.bam.io.UncompressedReader(blocks)
+        assert(r.seek(graft.bam.codec.Pos(0, 0)))
+        graft.bam.codec.Bam.readHeader(r)
+        Iterator.continually(graft.bam.codec.Bam.readRecord(r)).takeWhile(_ != null)
+          .map(_.copy(blockPos = -1, offset = -1)).toVector
+      } finally blocks.close()
+    }
+    val want = fx.records.map(_.copy(blockPos = -1, offset = -1))
+    assert(rewritten(None) == want)
+    // the first record of the second partition, and a slice across its seam
+    val seam = fx.records.indexWhere(_.blockPos >= splitSize)
+    assert(seam > 0)
+    Seq((seam - 3L, seam + 3L), (1000L, 7000L)).foreach { case (lo, hi) =>
+      assert(rewritten(Some((lo, hi))) == want.slice(lo.toInt, hi.toInt), s"[$lo, $hi)")
+    }
+  }
 }
