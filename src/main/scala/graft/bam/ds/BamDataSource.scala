@@ -53,6 +53,24 @@ object BamDataSource {
   def serializableConf(): org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(hadoopConf())
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[BamDataSource])
+
+  /** Whether the side-car `bam + suffix` exists and is not older than the
+    * BAM. A side-car older than its BAM (the BAM was rewritten after it)
+    * describes other bytes: it must not be used, and each call that finds
+    * one logs a line naming it. */
+  def sidecarFresh(bam: String, suffix: String,
+                   conf: org.apache.hadoop.conf.Configuration = hadoopConf()): Boolean = {
+    val side = new org.apache.hadoop.fs.Path(bam + suffix)
+    val fs = side.getFileSystem(conf)
+    fs.exists(side) && {
+      val fresh = fs.getFileStatus(side).getModificationTime >=
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(bam)).getModificationTime
+      if (!fresh) log.warn(s"$side is older than $bam; not used")
+      fresh
+    }
+  }
+
   /** Resolve the `path`/`paths` option into concrete file paths; globs are
     * expanded through the Hadoop FS, so wildcard dirs-of-BAMs work. Local
     * (`file:`/schemeless) matches normalize to plain paths; any other
@@ -163,10 +181,11 @@ class BamScanBuilder(paths: Seq[String], options: Map[String, String])
     required = StructType(
       BamSchema.schema.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
 
-  /** Partial pushdown: contig/refIdx/pos predicates drive `.gri`-index
-    * partition pruning in planInputPartitions (the BAI-chunk role,
-    * Intervals.scala:108-127); EVERY filter is also returned for residual
-    * evaluation, because block-level ranges are not row-exact.
+  /** Partial pushdown: contig/refIdx/pos/endPos predicates drive `.bai`
+    * partition pruning in planInputPartitions (Bai.toBounds, the
+    * reference's BAI-chunk role, Intervals.scala:108-127); EVERY filter is
+    * also returned for residual evaluation, because block-level ranges are
+    * not row-exact.
     *
     * Multi-path reads may span BAMs with DIFFERENT header dictionaries
     * (contig orderings), so supportedness is classified against every
@@ -179,7 +198,7 @@ class BamScanBuilder(paths: Seq[String], options: Map[String, String])
     val dicts = paths.map(p => BamScan.contigToIdx(Seq(p)))
     pushed =
       if (dicts.isEmpty) Array.empty
-      else dicts.map(GenomicIndex.supported(filters, _).toSet)
+      else dicts.map(Bai.supported(filters, _).toSet)
         .reduce(_ intersect _).toArray
     this.allFilters = filters
     filters
@@ -236,15 +255,12 @@ object BamCountScan {
     * side-car cut short or copied from another file, fails one of these
     * and the count decodes instead. Costs the side-car's tail and a few
     * block reads of the BAM. */
-  def sidecarCurrent(path: String, conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val bam = new org.apache.hadoop.fs.Path(path)
-    val rec = new org.apache.hadoop.fs.Path(path + ".records")
-    val fs = rec.getFileSystem(conf)
-    if (!fs.exists(rec)) return false
-    val recStatus = fs.getFileStatus(rec)
-    recStatus.getModificationTime >= fs.getFileStatus(bam).getModificationTime &&
-      lastEntry(fs, rec, recStatus.getLen).exists(endsAt(path, conf, _))
-  }
+  def sidecarCurrent(path: String, conf: org.apache.hadoop.conf.Configuration): Boolean =
+    BamDataSource.sidecarFresh(path, ".records", conf) && {
+      val rec = new org.apache.hadoop.fs.Path(path + ".records")
+      val fs = rec.getFileSystem(conf)
+      lastEntry(fs, rec, fs.getFileStatus(rec).getLen).exists(endsAt(path, conf, _))
+    }
 
   /** The last `blockPos,offset` line of a side-car, read from its tail. */
   private def lastEntry(fs: org.apache.hadoop.fs.FileSystem,
@@ -406,16 +422,12 @@ class BamScan(paths: Seq[String], required: StructType,
         catch { case NonFatal(_) => Array.empty[org.apache.hadoop.fs.BlockLocation] })
       def hostsFor(s: Long, e: Long): Array[String] = locality.hostsFor(s, e)
 
-      // index pruning: engine `.gri` side-car first, standard `.bai` else
+      // `.bai` pruning, from an index not older than the BAM
       val pruned: Option[Seq[(Long, Long)]] =
         if (filters.isEmpty) None
-        else GenomicIndex.toBounds(filters.toSeq, BamScan.contigToIdx(Seq(p)))
-          .flatMap { bounds =>
-            GenomicIndex.read(p)
-              .map(idx => GenomicIndex.pruneRanges(idx, bounds, splitSize))
-              .orElse(Bai.read(p).flatMap(idx =>
-                Bai.pruneRanges(idx, bounds, splitSize)))
-          }
+        else Bai.toBounds(filters.toSeq, BamScan.contigToIdx(Seq(p)))
+          .filter(_ => BamDataSource.sidecarFresh(p, ".bai", conf))
+          .flatMap(bounds => Bai.read(p).flatMap(Bai.pruneRanges(_, bounds, splitSize)))
       val ranges = pruned.getOrElse(
         (0L until status.getLen by splitSize)
           .map(s => (s, math.min(s + splitSize, status.getLen))))

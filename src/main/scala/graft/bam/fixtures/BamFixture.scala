@@ -17,7 +17,10 @@ import graft.bam.codec.{Bam, Bgzf, Pos}
   * Alongside the `.bam` it writes the two side-car indexes the reference
   * defines: `.blocks` = `start,compressedSize,uncompressedSize` lines
   * (bgzf/.../index/IndexBlocks.scala:41) and `.records` =
-  * `blockPos,offset` lines (check/.../index/IndexRecords.scala:55).
+  * `blockPos,offset` lines (check/.../index/IndexRecords.scala:55) — and
+  * the standard `.bai`, the engine's pruning index, built from the
+  * generator's truth by the same [[graft.bam.ds.Bai.Builder]] that
+  * `BamOps.indexBai` runs over a scan.
   */
 object BamFixture {
 
@@ -180,15 +183,13 @@ object BamFixture {
       withPos.map(r => s"${r.blockPos},${r.offset}")
         .mkString("", "\n", "\n").getBytes("ASCII"))
 
-    // genomic interval index (.gri): per-block (refIdx,pos) min/max over
-    // the records starting in that block
-    val csize = blockArr.map(m => m.start -> m.compressedSize).toMap
-    graft.bam.ds.GenomicIndex.write(bam.toString,
-      withPos.groupBy(_.blockPos).toSeq.map { case (bp, rs) =>
-        graft.bam.ds.GenomicIndex.BlockRange(bp, csize(bp),
-          rs.map(_.refIdx).min, rs.map(_.pos).min,
-          rs.map(_.refIdx).max, rs.map(_.pos).max)
-      })
+    // a record ends where the next one starts; the last at the file end
+    val bai = new graft.bam.ds.Bai.Builder(bam.toString)
+    val ends = withPos.drop(1).map(_.virtualPos.packed) :+ (image.length.toLong << 16)
+    withPos.zip(ends).foreach { case (r, vend) =>
+      if (r.refIdx >= 0) bai.add(r.refIdx, r.pos, r.end, r.virtualPos.packed, vend)
+    }
+    graft.bam.ds.Bai.write(bam.toString, bai.result(contigs.length))
 
     val headerEnd = toPos(recOffsets.headOption.getOrElse(uncompressed.length.toLong))
     val header = Bam.Header(samText, contigs, headerEnd)

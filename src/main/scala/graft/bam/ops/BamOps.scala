@@ -1,13 +1,12 @@
 package graft.bam.ops
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.bam.check.Checker
 import graft.bam.codec.Pos
+import graft.bam.ds.{Bai, BamDataSource}
 import graft.bam.io.{BlockReader, SeekableInput}
 
 /** Auxiliary BAM relations + the differential-checker pipeline — the
@@ -25,18 +24,16 @@ object BamOps {
     StructField("blockPos", LongType, nullable = false),
     StructField("offset", IntegerType, nullable = false)))
 
-  /** `bam_blocks(path)` — the block catalog (S11/S13). Side-car fast path:
-    * plain CSV scan. No side-car: distributed discovery — parallelize byte
-    * ranges, each task walks headers (metadata-only, no inflate) from the
-    * first boundary at-or-after its range start (reference:
+  /** `bam_blocks(path)` — the block catalog (S11/S13). Side-car fast path
+    * (a `.blocks` not older than the BAM): plain CSV scan. Otherwise
+    * distributed discovery — parallelize byte ranges, each task walks
+    * headers (metadata-only, no inflate) from the first boundary
+    * at-or-after its range start (reference:
     * check/.../bam/check/Blocks.scala:47-208). */
-  def blocks(spark: SparkSession, path: String, numSplits: Int = 0): DataFrame = {
-    val sidecar = path + ".blocks"
-    val hp = new org.apache.hadoop.fs.Path(sidecar)
-    if (hp.getFileSystem(graft.bam.ds.BamDataSource.hadoopConf()).exists(hp))
-      spark.read.schema(blocksSchema).csv(sidecar)
+  def blocks(spark: SparkSession, path: String, numSplits: Int = 0): DataFrame =
+    if (BamDataSource.sidecarFresh(path, ".blocks"))
+      spark.read.schema(blocksSchema).csv(path + ".blocks")
     else discoverBlocks(spark, path, numSplits)
-  }
 
   /** Discovery parallelism scales with the file: one split per 32 MiB
     * (floor 8), so a side-car-less 100 GB BAM walks headers in ~3200
@@ -45,13 +42,13 @@ object BamOps {
 
   def discoverBlocks(spark: SparkSession, path: String, numSplits: Int = 0): DataFrame = {
     import spark.implicits._
-    val len = graft.bam.ds.Bai.fileLen(path)
+    val len = Bai.fileLen(path)
     val splits =
       if (numSplits > 0) numSplits
       else math.max(8L, (len + DiscoverSplitBytes - 1) / DiscoverSplitBytes).toInt
     val splitSize = math.max(1L, (len + splits - 1) / splits)
     val bounds = (0L until len by splitSize).map(s => (s, math.min(s + splitSize, len)))
-    val conf = graft.bam.ds.BamDataSource.serializableConf()
+    val conf = BamDataSource.serializableConf()
     spark.createDataset(bounds).repartition(bounds.length)
       .flatMap { case (start, end) =>
         val blocks = new BlockReader(SeekableInput.open(path, conf.value))
@@ -92,102 +89,58 @@ object BamOps {
       .orderBy("blockPos", "offset")
     writeCsvOrdered(df, out)
   }
-  /** Build the `.gri` genomic index from the source itself: distributed
-    * scan → per-block (refIdx,pos) min/max over record starts, joined to
-    * the block catalog for sizes, streamed to the side-car in sorted order
-    * (no full collect — one block row in driver memory at a time). */
-  def indexGenomic(spark: SparkSession, path: String): Unit = {
-    val mins = spark.read.format("bam").load(path)
-      .groupBy(col("virtualPos.blockPos").as("bp"))
-      .agg(min("refIdx").as("minRef"), min("pos").as("minPos"),
-        max("refIdx").as("maxRef"), max("pos").as("maxPos"))
-    val rows = mins
-      .join(blocks(spark, path), col("bp") === col("start"))
-      .orderBy("bp")
-      .select(col("bp"), col("compressedSize"),
-        col("minRef"), col("minPos"), col("maxRef"), col("maxPos"))
-    // write through GenomicIndex (Hadoop FS) — a local PrintWriter breaks
-    // for hdfs://-style paths, which is where the reader resolves it
-    graft.bam.ds.GenomicIndex.write(path,
-      rows.toLocalIterator().asScala.map { r =>
-        graft.bam.ds.GenomicIndex.BlockRange(r.getLong(0), r.getInt(1),
-          r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
-      }.toSeq)
-  }
-
-  /** SAM-spec R-tree bin of [beg, endEx) as a column (see Bai.reg2bin). */
-  private def binCol(beg: org.apache.spark.sql.Column,
-                     endEx: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val e = endEx - 1
-    when(shiftright(beg, 14) === shiftright(e, 14), shiftright(beg, 14) + 4681)
-      .when(shiftright(beg, 17) === shiftright(e, 17), shiftright(beg, 17) + 585)
-      .when(shiftright(beg, 20) === shiftright(e, 20), shiftright(beg, 20) + 73)
-      .when(shiftright(beg, 23) === shiftright(e, 23), shiftright(beg, 23) + 9)
-      .when(shiftright(beg, 26) === shiftright(e, 26), shiftright(beg, 26) + 1)
-      .otherwise(0)
+  /** Scan split size that fills the cluster's cores: the file divided by
+    * `defaultParallelism`, 8 MiB at most and 64 KiB at least. */
+  private[ops] def coreFillingSplitSize(spark: SparkSession, path: String): Long = {
+    val cores = spark.sparkContext.defaultParallelism
+    math.min(8L << 20, math.max(64L << 10, (Bai.fileLen(path) + cores - 1) / cores))
   }
 
   /** Build a standard `.bai` for a coordinate-sorted BAM from the source
-    * itself. Record spans and virtual positions are computed distributed —
-    * a record's end virtual offset is its successor's start (BAM records
-    * are contiguous in the uncompressed stream), via the two-phase global
-    * lead — then reduced to one chunk per (ref, bin) plus the 16 kb-window
-    * linear index. Only the index rows (one per bin/window) reach the
+    * itself, in one narrow job. Each task folds its scan partition into a
+    * [[Bai.Builder]]: a record's end virtual offset is its successor's
+    * start (BAM records are contiguous in the uncompressed stream), so
+    * each task holds its last record back and returns it with its partial
+    * index and its first record start. The driver merges the partials in
+    * partition order; a held-back record ends at the next non-empty
+    * partition's first start, the file's last at `fileLen << 16`. Only
+    * the partial indexes (bounded by bins and 16 kb windows) reach the
     * driver for the final small binary write, like the reference's index
     * writers. */
   def indexBai(spark: SparkSession, path: String): Unit = {
-    import graft.bam.ds.Bai
-    val fileLen = Bai.fileLen(path)
-    val vpos = shiftleft(col("virtualPos.blockPos"), 16)
-      .bitwiseOR(col("virtualPos.offset").cast("long"))
-    val recs = spark.read.format("bam").load(path)
-      .select(col("refIdx"), col("pos"), col("endPos"), vpos.as("vpos64"))
-    val withEnd = graft.ops.ScalableWindow.lead1(
-      recs, Seq("vpos64"), "vpos64", "endVpos", lit(fileLen << 16))
-    val mapped = withEnd.filter(col("refIdx") >= 0)
-      .withColumn("e", greatest(col("endPos"), col("pos") + 1))
-    // Chunks per CONTIGUOUS record run inside each (ref, bin) — the spec's
-    // many-chunks-per-bin shape (reference reader: check/.../bam/index/
-    // Index.scala:11-92) — rather than one min..max span per bin, which
-    // over-covers cold bytes when a bin's coordinate clusters are
-    // fragmented. Gaps-and-islands over the bin's records in vpos order: a
-    // new chunk starts where the record does not continue its bin-
-    // predecessor's end AND sits in a different compressed block (the
-    // standard chunk-merge rule — interleaved bins must not fragment into
-    // per-record chunks). The window is partitioned by (ref, bin), so no
-    // single-partition cliff.
-    val binW = org.apache.spark.sql.expressions.Window
-      .partitionBy("refIdx", "bin").orderBy("vpos64")
-    val prevEnd = lag("endVpos", 1).over(binW)
-    val chunkRows = mapped
-      .withColumn("bin", binCol(col("pos"), col("e")))
-      .withColumn("newRun",
-        when(prevEnd.isNull ||
-          (col("vpos64") =!= prevEnd &&
-            shiftright(col("vpos64"), 16) =!= shiftright(prevEnd, 16)), 1L)
-          .otherwise(0L))
-      .withColumn("run", sum("newRun").over(
-        binW.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy("refIdx", "bin", "run")
-      .agg(min("vpos64").as("beg"), max("endVpos").as("end"))
-      .collect()
-    val linearRows = mapped
-      .withColumn("w",
-        explode(sequence(shiftright(col("pos"), 14), shiftright(col("e") - 1, 14))))
-      .groupBy("refIdx", "w").agg(min("vpos64").as("off"))
-      .collect()
-    val nRefs = readContigLens(path).length
-    val refs = (0 until nRefs).map { ref =>
-      val bins = chunkRows.iterator.filter(_.getInt(0) == ref)
-        .map(r => (r.getInt(1), Bai.Chunk(r.getLong(3), r.getLong(4))))
-        .toSeq.groupBy(_._1)
-        .map { case (bin, cs) => bin -> cs.map(_._2).sortBy(_.beg).toIndexedSeq }
-      val lin = linearRows.iterator.filter(_.getInt(0) == ref)
-        .map(r => r.getInt(1) -> r.getLong(2)).toMap
-      val maxW = if (lin.isEmpty) -1 else lin.keys.max
-      Bai.RefIndex(bins, IndexedSeq.tabulate(maxW + 1)(w => lin.getOrElse(w, 0L)))
+    val parts = spark.read.format("bam")
+      .option("splitSize", coreFillingSplitSize(spark, path)).load(path)
+      .select("refIdx", "pos", "endPos", "virtualPos").queryExecution.toRdd
+      .mapPartitions { rows =>
+        val part = new Bai.Builder(path)
+        var first = -1L
+        var held: HeldRecord = null
+        rows.foreach { r =>
+          val vp = r.getStruct(3, 2)
+          val vbeg = (vp.getLong(0) << 16) | vp.getInt(1)
+          if (held == null) first = vbeg else held.addTo(part, vbeg)
+          held = HeldRecord(r.getInt(0), r.getInt(1), r.getInt(2), vbeg)
+        }
+        Iterator.single((first, part, Option(held)))
+      }.collect()
+    val index = new Bai.Builder(path)
+    var held: Option[HeldRecord] = None
+    parts.foreach { case (first, part, last) =>
+      if (last.isDefined) {
+        held.foreach(_.addTo(index, first))
+        index ++ part
+        held = last
+      }
     }
-    Bai.write(path, Bai.Index(refs.toIndexedSeq))
+    held.foreach(_.addTo(index, Bai.fileLen(path) << 16))
+    Bai.write(path, index.result(readContigLens(path).length))
+  }
+
+  /** A record whose end virtual offset is not known yet; only mapped
+    * records (`refIdx >= 0`) enter the index. */
+  private final case class HeldRecord(refIdx: Int, pos: Int, end: Int, vbeg: Long) {
+    def addTo(b: Bai.Builder, vend: Long): Unit =
+      if (refIdx >= 0) b.add(refIdx, pos, end, vbeg, vend)
   }
 
   /** Ordered single-file writer: streams partitions through the driver one
@@ -211,7 +164,7 @@ object BamOps {
     val blockMetas = blocks(spark, path)
       .repartitionByRange(numPartitions, col("start"))
       .as[(Long, Int, Int)]
-    val conf = graft.bam.ds.BamDataSource.serializableConf()
+    val conf = BamDataSource.serializableConf()
     blockMetas.mapPartitions { metas =>
       if (!metas.hasNext) Iterator.empty
       else {
@@ -257,7 +210,7 @@ object BamOps {
                   numPartitions: Int = 8): DataFrame = {
     import spark.implicits._
     val contigLens = readContigLens(path)
-    val conf = graft.bam.ds.BamDataSource.serializableConf()
+    val conf = BamDataSource.serializableConf()
     val eager = blocks(spark, path)
       .repartitionByRange(numPartitions, col("start"))
       .as[(Long, Int, Int)]
@@ -367,7 +320,7 @@ object BamOps {
   /** Header contig dictionary: (name, length) in refIdx order. */
   def readContigs(path: String): IndexedSeq[(String, Int)] = {
     val blocks = new BlockReader(
-      SeekableInput.open(path, graft.bam.ds.BamDataSource.hadoopConf()))
+      SeekableInput.open(path, BamDataSource.hadoopConf()))
     try {
       val r = new graft.bam.io.UncompressedReader(blocks)
       r.seek(Pos(0, 0))

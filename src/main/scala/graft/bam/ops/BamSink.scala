@@ -109,9 +109,9 @@ object BamSink {
 
   /** The rewrite app: read a BAM, optionally keep a record-index range
     * [lo, hi) in file order (P9 row-number selection), write it back. The
-    * scan's split size fills the cluster's cores (8 MiB at most, 64 KiB at
-    * least); with a range, one count job over the same partitions gives
-    * each partition's first record index.
+    * scan's split size fills the cluster's cores
+    * ([[BamOps.coreFillingSplitSize]]); with a range, one count job over
+    * the same partitions gives each partition's first record index.
     *
     * Re-index options (reference parity: HTSJDKRewrite.scala:21-93 takes
     * `-b` indexBlocks / `-i` indexRecords to index its output):
@@ -127,10 +127,7 @@ object BamSink {
               index: Boolean = false,
               indexBlocks: Boolean = false,
               indexRecords: Boolean = false): Unit = {
-    val inP = new HPath(inPath)
-    val len = inP.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(inP).getLen
-    val cores = spark.sparkContext.defaultParallelism
-    val splitSize = math.min(8L << 20, math.max(64L << 10, (len + cores - 1) / cores))
+    val splitSize = BamOps.coreFillingSplitSize(spark, inPath)
     def reads() = spark.read.format("bam").option("splitSize", splitSize).load(inPath)
     val keep = range.map { case (lo, hi) =>
       val counts = reads().select("refIdx").queryExecution.toRdd

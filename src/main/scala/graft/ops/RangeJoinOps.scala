@@ -75,7 +75,7 @@ object RangeJoinOps {
     * Same domain requirement as above; column names must be disjoint
     * across the two inputs (genomic callers join per contig — add the
     * contig to the bin key by prefixing it into the coordinates or
-    * pre-partitioning, as [[graft.bam.ds.GenomicIndex]] does). */
+    * pre-partitioning, as the `.bai` keeps one bin tree per contig, [[graft.bam.ds.Bai]]). */
   def binnedIntervalJoin(
       left: DataFrame, lLoCol: String, lHiCol: String,
       right: DataFrame, rLoCol: String, rHiCol: String,

@@ -141,6 +141,35 @@ class BamSourceSpec extends SparkTestBase {
     assert(rows == Files.size(bam) / 170, "falls back to the size estimate")
   }
 
+  test("a .bai or .blocks side-car older than its BAM is not used") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
+    val dir = Files.createTempDirectory("graft-stale-index")
+    val bam = dir.resolve("reads.bam")
+    Files.copy(Paths.get(fx.bamPath), bam)
+    Seq(".bai", ".blocks").foreach(s =>
+      Files.copy(Paths.get(fx.bamPath + s), Paths.get(bam.toString + s)))
+    def query() = spark.read.format("bam").option("splitSize", "16384").load(bam.toString)
+      .filter(col("refIdx") === 0 && col("pos") >= 300000 && col("pos") < 600000)
+    def posIn(rs: Seq[graft.bam.codec.Bam.Record]) =
+      rs.filter(r => r.refIdx == 0 && r.pos >= 300000 && r.pos < 600000).map(_.readName).sorted
+    assert(query().select("readName").collect().map(_.getString(0)).sorted.toSeq ==
+      posIn(fx.records))
+    // rewrite the BAM in place; its side-cars now describe another file
+    val next = BamFixture.write(Files.createTempDirectory("graft-stale-next"), "next.bam",
+      n = 6000, seed = 99)
+    Files.copy(Paths.get(next.bamPath), bam, StandardCopyOption.REPLACE_EXISTING)
+    val older = FileTime.fromMillis(Files.getLastModifiedTime(bam).toMillis - 10000)
+    Seq(".bai", ".blocks").foreach(s =>
+      Files.setLastModifiedTime(Paths.get(bam.toString + s), older))
+    val want = posIn(next.records)
+    assert(want.length > posIn(fx.records).length)
+    assert(query().select("readName").collect().map(_.getString(0)).sorted.toSeq == want)
+    assert(graft.bam.ops.BamOps.blocks(spark, bam.toString).orderBy("start").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq ==
+      next.blocks.map(m => (m.start, m.compressedSize, m.uncompressedSize)))
+  }
+
   test("a header dictionary whose file cannot be stat'ed is read uncached") {
     import java.nio.file.Files
     import graft.bam.codec.{Bam, Bgzf}

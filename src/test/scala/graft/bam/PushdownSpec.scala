@@ -83,7 +83,7 @@ class PushdownSpec extends SparkTestBase {
 
   test("indexBai emits per-run chunks: fragmented bins prune tighter than " +
     "merged spans") {
-    import graft.bam.ds.{Bai, GenomicIndex}
+    import graft.bam.ds.Bai
     // dense fixture: coarse (585-level) bins collect records crossing
     // DIFFERENT 16k boundaries 128k apart — in file order those runs are
     // separated by thousands of fine-bin records, so a single min..max
@@ -127,7 +127,7 @@ class PushdownSpec extends SparkTestBase {
       else if (bin >= 1) ((bin - 1) << 26, (bin - 1 + 1) << 26)
       else (0, Bai.MaxCoord)
     def prunedBytes(i: Bai.Index, ref: Int, lo: Int, hi: Int): Long =
-      Bai.pruneRanges(i, Seq(GenomicIndex.GBound(Some(ref), lo, hi)),
+      Bai.pruneRanges(i, Seq(Bai.GBound(Some(ref), lo, hi)),
           Long.MaxValue).get.map { case (s, e) => e - s }.sum
     val strict = (for {
       (r, ref) <- idx.refs.zipWithIndex
@@ -139,10 +139,7 @@ class PushdownSpec extends SparkTestBase {
     assert(strict.nonEmpty && strict.contains(true),
       s"no fragmented-bin query pruned tighter (${strict.size} tried)")
 
-    // and the pruned read stays exact THROUGH the .bai (drop the .gri
-    // side-car, which would otherwise win the index dispatch)
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(GenomicIndex.sidecarPath(frag.bamPath)))
+    // and the pruned read stays exact THROUGH the .bai
     def load() = spark.read.format("bam")
       .option("splitSize", "8192").load(frag.bamPath)
     val q = load().filter(col("refIdx") === 0 && col("pos") < 40000)
@@ -429,25 +426,32 @@ class PushdownSpec extends SparkTestBase {
 
   test("pos predicates at Int.MaxValue stay satisfiable (no overflow wrap)") {
     import org.apache.spark.sql.sources.{EqualTo => FEq, LessThanOrEqual => FLe, GreaterThan => FGt}
-    import graft.bam.ds.GenomicIndex
-    val edgeBlock = GenomicIndex.BlockRange(0L, 100,
-      0, Int.MaxValue, 0, Int.MaxValue)
+    import graft.bam.ds.Bai
+    def bounds(f: org.apache.spark.sql.sources.Filter) =
+      Bai.toBounds(Seq(FEq("contig", "chr1"), f), Map("chr1" -> 0))
     // pos = MaxValue: the exclusive hi must be MaxValue+1 in LONG space —
     // Int wrap turned this into "provably empty" and silently dropped rows
-    val eq = GenomicIndex.toBounds(
-      Seq(FEq("contig", "chr1"), FEq("pos", Int.MaxValue)),
-      Map("chr1" -> 0)).get
-    assert(eq.nonEmpty && eq.exists(_.matches(edgeBlock)))
-    // pos <= MaxValue is a full range: must keep the edge block
-    val le = GenomicIndex.toBounds(
-      Seq(FEq("contig", "chr1"), FLe("pos", Int.MaxValue)),
-      Map("chr1" -> 0)).get
-    assert(le.exists(_.matches(edgeBlock)))
+    assert(bounds(FEq("pos", Int.MaxValue)) ==
+      Some(Seq(Bai.GBound(Some(0), Int.MaxValue.toLong, Int.MaxValue + 1L))))
+    // pos <= MaxValue is a full range
+    assert(bounds(FLe("pos", Int.MaxValue)) ==
+      Some(Seq(Bai.GBound(Some(0), Long.MinValue, Int.MaxValue + 1L))))
     // pos > MaxValue is genuinely unsatisfiable — provably empty is right
-    val gt = GenomicIndex.toBounds(
-      Seq(FEq("contig", "chr1"), FGt("pos", Int.MaxValue)),
-      Map("chr1" -> 0)).get
-    assert(gt.isEmpty || !gt.exists(_.matches(edgeBlock)))
+    assert(bounds(FGt("pos", Int.MaxValue)) == Some(Seq.empty))
+  }
+
+  test("an endPos lower bound prunes an overlap query from its start, " +
+    "not the contig's") {
+    val (lo, hi) = (1_000_000, 1_200_000)
+    val upTo = load().filter(col("refIdx") === 0 && col("pos") < hi)
+    val overlap = load().filter(col("refIdx") === 0 &&
+      col("pos") < hi && col("endPos") > lo)
+    assert(overlap.rdd.getNumPartitions < upTo.rdd.getNumPartitions,
+      s"overlap planned ${overlap.rdd.getNumPartitions} vs ${upTo.rdd.getNumPartitions}")
+    val want = fx.records.filter(r => r.refIdx == 0 && r.pos < hi && r.end > lo)
+    assert(want.nonEmpty)
+    assert(overlap.select("readName").collect().map(_.getString(0)).sorted.toSeq ==
+      want.map(_.readName).sorted)
   }
 
   test("rewrite(index=true) re-indexes: the rewrite-time BAI prunes " +
@@ -485,17 +489,5 @@ class PushdownSpec extends SparkTestBase {
     assert(q().rdd.getNumPartitions == rewriteParts &&
       q().count() == rewriteCount,
       "fresh BAI must prune the identical partition set")
-  }
-
-  test("indexGenomic rebuilds an equivalent index from the source") {
-    val tmpDir = java.nio.file.Files.createTempDirectory("graft-gri")
-    val copy = tmpDir.resolve("copy.bam")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(fx.bamPath), copy)
-    graft.bam.ops.BamOps.indexGenomic(spark, copy.toString)
-    val rebuilt = graft.bam.ds.GenomicIndex.read(copy.toString).get
-      .sortBy(_.start)
-    val original = graft.bam.ds.GenomicIndex.read(fx.bamPath).get
-      .sortBy(_.start)
-    assert(rebuilt == original)
   }
 }
