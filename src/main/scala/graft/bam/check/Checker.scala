@@ -95,14 +95,6 @@ final class Checker(blocks: BlockReader, contigLengths: IndexedSeq[Int],
 
   private val r = new UncompressedReader(blocks)
   private val nameBuf = new Array[Byte](256)
-  private val intBuf = new Array[Byte](4)
-
-  @inline private def readIntLE(): Long = {
-    val n = r.readFully(intBuf, 0, 4)
-    if (n < 4) -1L
-    else ((intBuf(0) & 0xff) | ((intBuf(1) & 0xff) << 8) |
-      ((intBuf(2) & 0xff) << 16) | ((intBuf(3).toLong & 0xff) << 24)) & 0xffffffffL
-  }
 
   /** Eager verdict at `pos`: true iff `readsToCheck` successive records
     * validate (or a clean EOF lands exactly on a record boundary). */
@@ -137,19 +129,19 @@ final class Checker(blocks: BlockReader, contigLengths: IndexedSeq[Int],
     * (possibly `ok` when EOF cleanly truncates the chain). */
   private def checkOne(full: Boolean, relaxed: Boolean, readsBefore: Int): Flags = {
     val fail = Flags(readsBeforeError = readsBefore)
-    val blockSize = readIntLE()
+    val blockSize = r.readIntLE()
     if (blockSize < 0) return fail.copy(tooFewFixedBlockBytes = true)
     if (blockSize < Bam.FixedAfterSize)
       return fail.copy(tooFewFixedBlockBytes = true)
 
-    val refIdx = readIntLE().toInt
-    val refPos = readIntLE().toInt
-    val lenByte = readIntLE()
-    val cigFlags = readIntLE()
-    val lSeqL = readIntLE()
-    val nextRefIdx = readIntLE().toInt
-    val nextPos = readIntLE().toInt
-    val tlen = readIntLE()
+    val refIdx = r.readIntLE().toInt
+    val refPos = r.readIntLE().toInt
+    val lenByte = r.readIntLE()
+    val cigFlags = r.readIntLE()
+    val lSeqL = r.readIntLE()
+    val nextRefIdx = r.readIntLE().toInt
+    val nextPos = r.readIntLE().toInt
+    val tlen = r.readIntLE()
     if (tlen < 0) return fail.copy(tooFewFixedBlockBytes = true) // EOF mid-fixed-fields
 
     val lReadName = (lenByte & 0xff).toInt
@@ -201,7 +193,7 @@ final class Checker(blocks: BlockReader, contigLengths: IndexedSeq[Int],
     var i = 0
     var cigarBad = false
     while (i < nCigar && !cigarBad) {
-      val v = readIntLE()
+      val v = r.readIntLE()
       if (v < 0) return f.copy(tooFewBytesForCigarOps = true)
       cigarBad = (v & 0xf) > 8
       i += 1
@@ -270,20 +262,18 @@ object FindBlockStart {
 }
 
 /** Scan uncompressed positions from the start of `blockStart`'s block
-  * forward until the eager checker accepts a record start
+  * forward until `accept` (by default the eager checker) accepts a
+  * record start, giving up after `maxReadSize` positions
   * (reference: check/.../FindRecordStart.scala:30-63). */
 object FindRecordStart {
-  def apply(blocks: BlockReader, checker: Checker, blockStart: Long,
-            maxReadSize: Int): Option[Pos] =
-    apply(blocks, checker.eager _, blockStart, maxReadSize)
+  /** The default `maxReadSize`, in every caller: 2 MiB. */
+  val MaxReadSize: Int = 2 << 20
 
   def apply(blocks: BlockReader, checker: Checker, blockStart: Long): Option[Pos] =
-    apply(blocks, checker.eager _, blockStart, 1 << 20)
+    apply(blocks, checker.eager _, blockStart)
 
-  /** Pluggable-predicate form: the split-timing harness races the eager
-    * and relaxed checkers through the same scan (§2.11 compute-splits). */
   def apply(blocks: BlockReader, accept: Pos => Boolean, blockStart: Long,
-            maxReadSize: Int = 1 << 20): Option[Pos] = {
+            maxReadSize: Int = MaxReadSize): Option[Pos] = {
     var scanned = 0
     var block = blockStart
     while (scanned < maxReadSize) {
@@ -305,4 +295,28 @@ object FindRecordStart {
     }
     None
   }
+}
+
+/** Where each split of one file starts — the one rule the scan and the
+  * split-computation apps share (reference: CanLoadBam.scala:86-141). A
+  * split `[start, end)` owns the records that start in blocks whose
+  * compressed start lies in it: split 0 starts at the header's first
+  * record; any other starts at the first record the checker (`relaxed`
+  * or eager) accepts from the first block boundary at or after `start`,
+  * and owns nothing when that boundary or record lies at or past `end`.
+  * One instance per task and file; the checker is built on first use. */
+final class SplitStart(blocks: BlockReader, header: Bam.Header, relaxed: Boolean,
+                       blocksToCheck: Int, readsToCheck: Int, maxReadSize: Int) {
+  private lazy val accept: Pos => Boolean = {
+    val checker = new Checker(blocks, header.contigs.map(_.length), readsToCheck)
+    if (relaxed) checker.relaxed _ else checker.eager _
+  }
+
+  def apply(start: Long, end: Long): Option[Pos] =
+    if (start == 0) Some(header.firstRecord)
+    else {
+      val blockStart = FindBlockStart(blocks, start, blocksToCheck)
+      if (blockStart >= end) None
+      else FindRecordStart(blocks, accept, blockStart, maxReadSize).filter(_.blockPos < end)
+    }
 }

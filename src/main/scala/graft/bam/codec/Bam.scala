@@ -2,6 +2,8 @@ package graft.bam.codec
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.util.control.NonFatal
+
 /** BAM container layer: header + record codec over the uncompressed byte
   * stream (the BGZF payload concatenation). Format is the public SAM/BAM
   * spec; behavioral reference for the fields we must surface:
@@ -72,7 +74,7 @@ object Bam {
 
   // ---------------------------------------------------------------- header
 
-  import graft.bam.io.UncompressedReader
+  import graft.bam.io.{BlockReader, UncompressedReader}
 
   /** Parse the header from a reader positioned at Pos(0,0); leaves the
     * reader at the first record. */
@@ -94,23 +96,19 @@ object Bam {
     Header(new String(text, "ASCII"), contigs, r.pos)
   }
 
-  // ---------------------------------------------------------------- decode
+  /** The header of the file `blocks` reads; an unreadable one fails with
+    * an error naming `path`. */
+  def readHeader(blocks: BlockReader, path: String): Header =
+    try {
+      val r = new UncompressedReader(blocks)
+      require(r.seek(Pos(0, 0)), "no BGZF block at offset 0")
+      readHeader(r)
+    } catch {
+      case NonFatal(e) =>
+        throw new IllegalArgumentException(s"$path: unreadable BAM header: ${e.getMessage}", e)
+    }
 
-  /** Decode the record whose block_size field starts at the reader's current
-    * position. Returns null at clean EOF. `withSeq`/`withAttrs` skip the
-    * expensive payload decodes when the projection doesn't need them
-    * (column pruning reaching the byte level). */
-  def readRecord(r: UncompressedReader, withSeq: Boolean = true,
-                 withQual: Boolean = true, withAttrs: Boolean = true): Record = {
-    val vp = r.pos
-    if (!r.hasMore) return null
-    val blockSize = r.readIntLE()
-    if (blockSize < 0) return null
-    val body = new Array[Byte](blockSize.toInt)
-    require(r.readFully(body, 0, body.length) == body.length,
-      s"truncated record at $vp")
-    decodeBody(body, vp, withSeq, withQual, withAttrs)
-  }
+  // ---------------------------------------------------------------- decode
 
   /** Cheap-prefix record predicate for reader-side skipping: sees only
     * the fields of the fixed 32-byte record prefix. Must be CONSERVATIVE
@@ -122,72 +120,58 @@ object Bam {
               nextRefIdx: Int, nextPos: Int, templateLen: Int): Boolean
   }
 
-  /** Sentinel returned by [[readRecordIf]] for a record the predicate
+  /** Sentinel returned by [[readRecord]] for a record the predicate
     * rejected: the reader advanced past it WITHOUT materializing name /
     * cigar / seq / qual / attrs (reference-compare with `eq`). */
   val SkippedRecord: Record = Record(Int.MinValue, -1, 0, 0, "", Nil, -1,
     -1, 0, "", Array.emptyByteArray, Map.empty, -1, -1)
 
-  /** [[readRecord]] with a prefix predicate: decodes the fixed 32-byte
-    * prefix into `scratch` (caller-owned, >= [[FixedAfterSize]] bytes,
-    * reused across records — zero per-skip allocation), and for a
-    * rejected record SKIPS the variable tail instead of materializing it.
-    * Returns null at clean EOF, [[SkippedRecord]] for a rejected record
-    * (caller loops), else the decoded record. */
-  def readRecordIf(r: UncompressedReader, withSeq: Boolean,
-                   withQual: Boolean, withAttrs: Boolean,
-                   pred: PrefixPred, scratch: Array[Byte]): Record = {
+  /** Decode the record whose block_size field starts at the reader's
+    * current position. Returns null at clean EOF. The 32-byte prefix is
+    * read first; a record that `pred` (when given) rejects is skipped
+    * without allocating, and [[SkippedRecord]] returned. `withSeq` /
+    * `withQual` / `withAttrs` skip the expensive payload decodes when the
+    * projection doesn't need them (column pruning reaching the byte
+    * level). A block_size outside [32, 2^31) or a record cut short fails
+    * naming its virtual position. */
+  def readRecord(r: UncompressedReader, withSeq: Boolean = true,
+                 withQual: Boolean = true, withAttrs: Boolean = true,
+                 pred: PrefixPred = null): Record = {
     val vp = r.pos
     if (!r.hasMore) return null
     val blockSize = r.readIntLE()
     if (blockSize < 0) return null
-    val n = blockSize.toInt
-    require(n >= FixedAfterSize, s"malformed record (block_size=$n) at $vp")
-    require(r.readFully(scratch, 0, FixedAfterSize) == FixedAfterSize,
-      s"truncated record at $vp")
-    val bb = ByteBuffer.wrap(scratch, 0, FixedAfterSize)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    val refIdx = bb.getInt
-    val pos = bb.getInt
-    bb.get() // l_read_name
-    val mapq = bb.get() & 0xff
-    bb.getShort // bin
-    bb.getShort // n_cigar
-    val flags = bb.getShort & 0xffff
-    bb.getInt // l_seq
-    val nextRefIdx = bb.getInt
-    val nextPos = bb.getInt
-    val tlen = bb.getInt
-    if (!pred(refIdx, pos, mapq, flags, nextRefIdx, nextPos, tlen)) {
-      val tail = n - FixedAfterSize
+    require(blockSize >= FixedAfterSize && blockSize <= Int.MaxValue,
+      s"malformed record (block_size=$blockSize) at $vp")
+    val refIdx = r.readIntLE().toInt
+    val pos = r.readIntLE().toInt
+    val binMqNl = r.readIntLE().toInt
+    val flagNc = r.readIntLE().toInt
+    val lSeq = r.readIntLE().toInt
+    val nextRefIdx = r.readIntLE().toInt
+    val nextPos = r.readIntLE().toInt
+    val tlenL = r.readIntLE()
+    require(tlenL >= 0, s"truncated record at $vp")
+    val tlen = tlenL.toInt
+    val lReadName = binMqNl & 0xff
+    val mapq = (binMqNl >>> 8) & 0xff
+    val nCigar = flagNc & 0xffff
+    val flags = flagNc >>> 16
+    val tail = blockSize.toInt - FixedAfterSize
+    if (pred != null && !pred(refIdx, pos, mapq, flags, nextRefIdx, nextPos, tlen)) {
       require(r.skip(tail) == tail, s"truncated record at $vp")
-      SkippedRecord
-    } else {
-      val body = new Array[Byte](n)
-      System.arraycopy(scratch, 0, body, 0, FixedAfterSize)
-      require(r.readFully(body, FixedAfterSize, n - FixedAfterSize) ==
-        n - FixedAfterSize, s"truncated record at $vp")
-      decodeBody(body, vp, withSeq, withQual, withAttrs)
+      return SkippedRecord
     }
-  }
-
-  private def decodeBody(body: Array[Byte], vp: graft.bam.codec.Pos,
-                         withSeq: Boolean, withQual: Boolean,
-                         withAttrs: Boolean): Record = {
+    val seqBytes = (lSeq + 1) / 2
+    require(lReadName >= 1 && lSeq >= 0 &&
+      lReadName + 4L * nCigar + seqBytes + lSeq <= tail,
+      s"malformed record (block_size=$blockSize, l_read_name=$lReadName, " +
+        s"n_cigar_op=$nCigar, l_seq=$lSeq) at $vp")
+    val body = new Array[Byte](tail)
+    require(r.readFully(body, 0, tail) == tail, s"truncated record at $vp")
     val bb = ByteBuffer.wrap(body).order(ByteOrder.LITTLE_ENDIAN)
-    val refIdx = bb.getInt
-    val pos = bb.getInt
-    val lReadName = bb.get() & 0xff
-    val mapq = bb.get() & 0xff
-    bb.getShort // bin
-    val nCigar = bb.getShort & 0xffff
-    val flags = bb.getShort & 0xffff
-    val lSeq = bb.getInt
-    val nextRefIdx = bb.getInt
-    val nextPos = bb.getInt
-    val tlen = bb.getInt
-    val name = new String(body, FixedAfterSize, lReadName - 1, "ASCII")
-    bb.position(FixedAfterSize + lReadName)
+    val name = new String(body, 0, lReadName - 1, "ASCII")
+    bb.position(lReadName)
     val cigar = new Array[CigarOp](nCigar)
     var i = 0
     while (i < nCigar) {
@@ -195,7 +179,6 @@ object Bam {
       cigar(i) = CigarOp(v & 0xf, v >>> 4)
       i += 1
     }
-    val seqBytes = (lSeq + 1) / 2
     val seq =
       if (!withSeq) { bb.position(bb.position() + seqBytes); "" }
       else {

@@ -55,28 +55,44 @@ object Bgzf {
 
   /** Uncompressed size stored in the last 4 footer bytes of a compressed
     * block image. */
-  def isize(block: Array[Byte], off: Int, compressedSize: Int): Int = {
-    val p = off + compressedSize - 4
-    (block(p) & 0xff) | ((block(p + 1) & 0xff) << 8) |
-      ((block(p + 2) & 0xff) << 16) | ((block(p + 3) & 0xff) << 24)
-  }
+  def isize(block: Array[Byte], off: Int, compressedSize: Int): Int =
+    le32(block, off + compressedSize - 4)
+
+  private def le32(b: Array[Byte], p: Int): Int =
+    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
 
   /** Inflate one block image (header+deflate+footer) into its payload. */
   def inflate(block: Array[Byte], off: Int, compressedSize: Int): Array[Byte] = {
+    val inf = new Inflater(true)
+    try inflate(inf, new CRC32, block, off, compressedSize, s"block at $off")
+    finally inf.end()
+  }
+
+  /** [[inflate]] with a caller-owned `inf` and `crc`, both reset here.
+    * The payload must match the footer's CRC32 and ISIZE; a mismatch or
+    * bad deflate data fails with an error that starts with `where`. */
+  def inflate(inf: Inflater, crc: CRC32, block: Array[Byte], off: Int,
+              compressedSize: Int, where: => String): Array[Byte] = {
     val out = new Array[Byte](isize(block, off, compressedSize))
     if (out.length == 0) return out
-    val inf = new Inflater(true)
+    inf.reset()
+    inf.setInput(block, off + HeaderSize, compressedSize - HeaderSize - FooterSize)
+    def fail(what: String) = throw new IllegalStateException(s"$where: $what")
+    var n = 0
     try {
-      inf.setInput(block, off + HeaderSize, compressedSize - HeaderSize - FooterSize)
-      var n = 0
       while (n < out.length && !inf.finished()) {
         val k = inf.inflate(out, n, out.length - n)
-        if (k == 0 && inf.needsInput()) throw new IllegalStateException("truncated BGZF block")
+        if (k == 0 && inf.needsInput()) fail("truncated BGZF block")
         n += k
       }
-      require(n == out.length, s"inflated $n of ${out.length} bytes")
-      out
-    } finally inf.end()
+      // a stream longer than ISIZE still has output pending here
+      if (n < out.length || (!inf.finished() && inf.inflate(new Array[Byte](1)) > 0))
+        fail(s"ISIZE mismatch: payload is not ${out.length} bytes")
+    } catch { case e: java.util.zip.DataFormatException => fail(s"bad deflate data: ${e.getMessage}") }
+    crc.reset()
+    crc.update(out)
+    if (crc.getValue.toInt != le32(block, off + compressedSize - FooterSize)) fail("CRC32 mismatch")
+    out
   }
 
   /** Compress one payload slice into a complete BGZF block image. */

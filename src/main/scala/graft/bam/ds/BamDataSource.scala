@@ -12,6 +12,8 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.bam.codec.Bam
+
 /** `spark.read.format("bam")` — DataSource V2 for BAM files.
   *
   * Spark-native re-expression of the reference's loader API
@@ -21,8 +23,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * shuffle — and scales by adding partitions: the contract that holds at
   * 100 TB on a 1000-executor cluster.
   *
-  * Options: `splitSize` (bytes, default 8 MiB), `blocksToCheck`,
-  * `readsToCheck`, `maxReadSize` (checker knobs, reference defaults).
+  * Options ([[BamScanOptions]]), each checked when the scan is planned:
+  *  - `splitSize`: bytes per partition, > 0, default 8 MiB (`"64m"` works);
+  *  - `blocksToCheck`: chained BGZF headers a block start needs, > 0, default 5;
+  *  - `readsToCheck`: records the checker validates per candidate, > 0, default 10;
+  *  - `maxReadSize`: positions searched for a split's first record, in
+  *    [1, 2^31), default 2 MiB;
+  *  - `checker`: `eager` (default) or `relaxed`.
+  *
+  * A bad option value, an unreadable header or a block whose CRC32 or
+  * ISIZE does not match fails the read with an error naming the option,
+  * the file or the block; none of them returns rows.
   */
 class BamDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bam"
@@ -148,6 +159,8 @@ class BamScanBuilder(paths: Seq[String], options: Map[String, String])
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with SupportsPushDownAggregates {
+
+  BamScanOptions(options) // a bad value fails here, also when COUNT(*) is pushed
 
   private var required: StructType = BamSchema.schema
   private var pushed: Array[Filter] = Array.empty
@@ -285,9 +298,8 @@ object BamCountScan {
                      last: graft.bam.codec.Pos): Boolean = {
     val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(path, conf))
     try {
+      val lens = Bam.readHeader(blocks, path).contigs.map(_.length)
       val r = new graft.bam.io.UncompressedReader(blocks)
-      if (!r.seek(graft.bam.codec.Pos(0, 0))) return false
-      val lens = graft.bam.codec.Bam.readHeader(r).contigs.map(_.length)
       new graft.bam.check.Checker(blocks, lens).eager(last) && r.seek(last) && {
         val size = r.readIntLE()
         size >= 0 && r.skip(size) == size && !r.hasMore
@@ -354,6 +366,8 @@ class BamScan(paths: Seq[String], required: StructType,
               filters: Array[Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics {
 
+  private val scanOptions = BamScanOptions(options)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -397,7 +411,7 @@ class BamScan(paths: Seq[String], required: StructType,
       (if (filters.nonEmpty) s" pushed=${filters.mkString(",")}" else "")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val splitSize = options.getOrElse("splitsize", (8L << 20).toString).toLong
+    val splitSize = scanOptions.splitSize
     val strictEof = options.getOrElse("stricteof", "false").toBoolean
     val conf = BamDataSource.hadoopConf()
     paths.toArray.flatMap { p =>
@@ -436,45 +450,71 @@ class BamScan(paths: Seq[String], required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BamPartitionReaderFactory(required,
-      options.getOrElse("blockstocheck", "5").toInt,
-      options.getOrElse("readstocheck", "10").toInt,
-      options.getOrElse("maxreadsize", (1 << 21).toString).toInt,
-      options.getOrElse("checker", "eager"),
+    new BamPartitionReaderFactory(required, scanOptions.blocksToCheck,
+      scanOptions.readsToCheck, scanOptions.maxReadSize, scanOptions.checker,
       filters = filters,
       flagBits = options.getOrElse("flagbits", ""))
 }
 
 object BamScan {
-  // Header dictionaries are consulted once per path in pushFilters AND
-  // once per path in planInputPartitions (both driver-side, same process):
-  // cache per path so each header is decoded once per JVM. Headers are a
-  // few KB; eviction is not worth the code.
-  // keyed on (path, mtime, length) so an in-place rewrite invalidates; a
-  // path whose stat fails has no such key and is read uncached
-  private val dictCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Map[String, Int]]()
+  // Headers are consulted once per path in pushFilters AND once per path
+  // in planInputPartitions, and by the BamOps/BamSink driver code: cache
+  // per path so each header is decoded once per JVM. Headers are a few KB;
+  // eviction is not worth the code. Keyed on (path, mtime, length) so an
+  // in-place rewrite invalidates; a path whose stat fails has no such key
+  // and is read uncached.
+  private val headerCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Bam.Header]()
+
+  /** The header of the BAM at `path`, read driver-side with the session's
+    * Hadoop conf; an unreadable one fails naming `path`. */
+  def header(path: String): Bam.Header = {
+    val conf = BamDataSource.hadoopConf()
+    def read(): Bam.Header = {
+      val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(path, conf))
+      try Bam.readHeader(blocks, path) finally blocks.close()
+    }
+    val key = try {
+      val hp = new org.apache.hadoop.fs.Path(path)
+      val st = hp.getFileSystem(conf).getFileStatus(hp)
+      Some((path, st.getModificationTime, st.getLen))
+    } catch { case NonFatal(_) => None }
+    key.fold(read())(headerCache.computeIfAbsent(_, _ => read()))
+  }
 
   /** Contig-name → refIdx map from the (first) file's header, driver-side
     * (the reference broadcasts the same dictionary, CanLoadBam.scala:80).
     * Multi-path callers wanting per-file dictionaries pass one path at a
     * time — see BamScanBuilder.pushFilters. */
   def contigToIdx(paths: Seq[String]): Map[String, Int] =
-    paths.headOption.map { p =>
-      def read(): Map[String, Int] = {
-        val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(p))
-        try {
-          val r = new graft.bam.io.UncompressedReader(blocks)
-          r.seek(graft.bam.codec.Pos(0, 0))
-          graft.bam.codec.Bam.readHeader(r)
-            .contigs.zipWithIndex.map { case (c, i) => c.name -> i }.toMap
-        } finally blocks.close()
+    paths.headOption.map(header(_).contigs.zipWithIndex.map { case (c, i) => c.name -> i }.toMap)
+      .getOrElse(Map.empty)
+}
+
+/** The scan's loader options, checked when the scan is planned: each
+  * numeric option must be > 0 and `checker` must be `eager` or `relaxed`,
+  * or an `IllegalArgumentException` names the option and its value. Sizes
+  * take [[graft.util.Bytes.parse]]'s grammar (`"64m"`). */
+final case class BamScanOptions(splitSize: Long, blocksToCheck: Int, readsToCheck: Int,
+                                maxReadSize: Int, checker: String)
+
+object BamScanOptions {
+  /** `options` as the data source sees them: keys lower-cased. */
+  def apply(options: Map[String, String]): BamScanOptions = {
+    def get[T](name: String, default: T, expected: String)(parse: String => T)(ok: T => Boolean): T =
+      options.get(name.toLowerCase).fold(default) { v =>
+        (try Some(parse(v)) catch { case NonFatal(_) => None }).filter(ok).getOrElse(
+          throw new IllegalArgumentException(s"bam option $name=$v: expected $expected"))
       }
-      val key = try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val st = hp.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(hp)
-        Some((p, st.getModificationTime, st.getLen))
-      } catch { case NonFatal(_) => None }
-      key.fold(read())(dictCache.computeIfAbsent(_, _ => read()))
-    }.getOrElse(Map.empty)
+    def bytes(name: String, default: Long, max: Long) =
+      get(name, default, s"a byte size in [1, $max]")(graft.util.Bytes.parse)(b => b > 0 && b <= max)
+    def count(name: String, default: Int) =
+      get(name, default, "an integer > 0")(_.trim.toInt)(_ > 0)
+    BamScanOptions(
+      bytes("splitSize", 8L << 20, Long.MaxValue),
+      count("blocksToCheck", 5),
+      count("readsToCheck", 10),
+      bytes("maxReadSize", graft.bam.check.FindRecordStart.MaxReadSize, Int.MaxValue).toInt,
+      get("checker", "eager", "eager or relaxed")(identity)(Set("eager", "relaxed")))
+  }
 }

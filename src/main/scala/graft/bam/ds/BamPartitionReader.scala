@@ -1,5 +1,7 @@
 package graft.bam.ds
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -7,8 +9,8 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.bam.check.{Checker, FindBlockStart, FindRecordStart}
-import graft.bam.codec.{Bam, Pos}
+import graft.bam.check.SplitStart
+import graft.bam.codec.Bam
 import graft.bam.io.{BlockReader, SeekableInput, UncompressedReader}
 
 /** Ships the DRIVER's Hadoop conf to executors (`conf` is a
@@ -32,13 +34,10 @@ class BamPartitionReaderFactory(required: StructType, blocksToCheck: Int,
 
 /** Decodes the records of one byte-range split.
   *
-  * Split semantics (matching the reference's, CanLoadBam.scala:86-141): a
-  * split owns the records that *start* in blocks whose compressed start
-  * offset lies in [firstBlock(start), firstBlock(end)), where firstBlock
-  * scans forward for a verifiable BGZF boundary; the first record of a
-  * block is found with the eager checker. Records may *end* past the split
-  * boundary — the reader follows blocks as far as needed, so neighbors
-  * never duplicate or drop records.
+  * The split owns the records that *start* in it, by the rule in
+  * [[SplitStart]]. Records may *end* past the split boundary — the reader
+  * follows blocks as far as needed, so neighbors never duplicate or drop
+  * records. An unreadable header fails naming the file.
   */
 class BamPartitionReader(split: BamInputPartition, required: StructType,
                          blocksToCheck: Int, readsToCheck: Int, maxReadSize: Int,
@@ -54,49 +53,24 @@ class BamPartitionReader(split: BamInputPartition, required: StructType,
   private val reader = new UncompressedReader(blocks)
 
   /** Prefix predicate compiled from the pushed filters + flag-bit spec;
-    * None on unfiltered scans (zero per-record overhead there). */
-  private val prefixPred: Option[Bam.PrefixPred] =
-    RecordFilter.build(filters.toIndexedSeq, flagBits)
-  private val prefixScratch: Array[Byte] =
-    if (prefixPred.isDefined) new Array[Byte](Bam.FixedAfterSize) else null
+    * null on unfiltered scans (zero per-record overhead there). */
+  private val prefixPred: Bam.PrefixPred =
+    RecordFilter.build(filters.toIndexedSeq, flagBits).orNull
 
   private val wantSeq = required.fieldNames.contains("seq")
   private val wantQual = required.fieldNames.contains("qual")
   private val wantAttrs = required.fieldNames.contains("attrs")
-  private val wantContig = required.fieldNames.contains("contig")
 
-  private var header: Bam.Header = _
-  private var contigNames: Array[UTF8String] = _
-  private var active = init()
+  // Every split reads the header: the first starts just after it, and all
+  // need the contig dictionary for the checker and the contig column.
+  private val (contigNames, active) =
+    try {
+      val header = Bam.readHeader(blocks, split.path)
+      (header.contigs.map(c => UTF8String.fromString(c.name)).toArray,
+        new SplitStart(blocks, header, checkerProfile == "relaxed", blocksToCheck,
+          readsToCheck, maxReadSize)(split.start, split.end).exists(reader.seek))
+    } catch { case NonFatal(e) => blocks.close(); throw e }
   private var rec: Bam.Record = _
-
-  private def init(): Boolean = {
-    // Header is always parsed (first split emits from just after it; all
-    // splits need the contig dictionary for the checker + contig column).
-    val hr = new UncompressedReader(blocks)
-    if (!hr.seek(Pos(0, 0))) return false
-    header = Bam.readHeader(hr)
-    contigNames = header.contigs.map(c => UTF8String.fromString(c.name)).toArray
-
-    val startPos: Option[Pos] =
-      if (split.start == 0) Some(header.firstRecord)
-      else {
-        val blockStart = FindBlockStart(blocks, split.start, blocksToCheck)
-        if (blockStart >= split.end) None // this range holds no block start
-        else {
-          val lens = header.contigs.map(_.length)
-          val checker = new Checker(blocks, lens, readsToCheck)
-          // `checker=relaxed` loads through the documented hadoop-bam-profile
-          // boundary check (the reference's "upstream" loader in its timing
-          // races, compare/TimeLoad.scala:52-69).
-          val accept: Pos => Boolean =
-            if (checkerProfile == "relaxed") checker.relaxed _ else checker.eager _
-          FindRecordStart(blocks, accept, blockStart, maxReadSize)
-            .filter(_.blockPos < split.end)
-        }
-      }
-    startPos.exists(reader.seek)
-  }
 
   // local tallies, folded into the shared adders ONCE at close() — a
   // shared-memory increment per record would put cross-task contention on
@@ -106,25 +80,14 @@ class BamPartitionReader(split: BamInputPartition, required: StructType,
 
   override def next(): Boolean = {
     if (!active) return false
-    while (reader.hasMore) {
-      val p = reader.pos
-      if (p.blockPos >= split.end) return false // next split's territory
-      prefixPred match {
-        case None =>
-          rec = Bam.readRecord(reader, wantSeq, wantQual, wantAttrs)
-          if (rec != null) localDecoded += 1
-          return rec != null
-        case Some(pred) =>
-          rec = Bam.readRecordIf(reader, wantSeq, wantQual, wantAttrs,
-            pred, prefixScratch)
-          if (rec == null) return false // clean EOF
-          if (rec ne Bam.SkippedRecord) {
-            localDecoded += 1
-            return true
-          }
-          localSkipped += 1
-        // rejected from the 32-byte prefix: loop to the next record
+    while (reader.hasMore && reader.pos.blockPos < split.end) { // past it: next split's
+      rec = Bam.readRecord(reader, wantSeq, wantQual, wantAttrs, prefixPred)
+      if (rec == null) return false // clean EOF
+      if (rec ne Bam.SkippedRecord) {
+        localDecoded += 1
+        return true
       }
+      localSkipped += 1 // rejected from the 32-byte prefix
     }
     false
   }

@@ -13,12 +13,16 @@ import graft.bam.codec.{Bgzf, Pos}
   * read per chain hop past the window), then one header read and one block
   * read for each block [[blockAt]] inflates while the record-boundary
   * search probes it — cached blocks cost none.
+  * Every block inflated is checked against its CRC32 and ISIZE, through
+  * one `Inflater` that [[close]] ends.
   * One instance per task/partition; not thread-safe.
   */
 final class BlockReader(in: SeekableInput, cacheSize: Int = 64) extends AutoCloseable {
 
   private val headerBuf = new Array[Byte](Bgzf.HeaderSize)
   private val blockBuf = new Array[Byte](Bgzf.MaxBlockSize)
+  private val inflater = new java.util.zip.Inflater(true)
+  private val crc = new java.util.zip.CRC32
 
   /** The block-boundary search window: every header that starts among the
     * `MaxBlockSize` candidate offsets of one search lies wholly inside it.
@@ -86,7 +90,7 @@ final class BlockReader(in: SeekableInput, cacheSize: Int = 64) extends AutoClos
       if (size < 0) return None
       val n = in.readFullyAt(start, blockBuf, 0, size)
       if (n < size) return None
-      val payload = Bgzf.inflate(blockBuf, 0, size)
+      val payload = Bgzf.inflate(inflater, crc, blockBuf, 0, size, s"${in.name}@$start")
       if (payload.length != 0) {
         val b = Bgzf.Block(start, size, payload)
         cache.put(start, b)
@@ -97,7 +101,7 @@ final class BlockReader(in: SeekableInput, cacheSize: Int = 64) extends AutoClos
     None // unreachable
   }
 
-  override def close(): Unit = in.close()
+  override def close(): Unit = try in.close() finally inflater.end()
 }
 
 /** Sequential reader over the uncompressed byte stream spanning blocks,
@@ -169,9 +173,16 @@ final class UncompressedReader(val blocks: BlockReader) {
     done
   }
 
-  def readIntLE(): Long = { // -1 on EOF, else unsigned-ish in a Long
-    val a = readByte(); val b = readByte(); val c = readByte(); val d = readByte()
-    if (d < 0) -1L
-    else (a | (b << 8) | (c << 16) | (d.toLong << 24)) & 0xffffffffL
-  }
+  def readIntLE(): Long = // -1 on EOF, else unsigned-ish in a Long
+    if (remainingInBlock > 4) { // the common case: no block change
+      val b = block.bytes
+      val v = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
+        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+      off += 4
+      v & 0xffffffffL
+    } else {
+      val a = readByte(); val b = readByte(); val c = readByte(); val d = readByte()
+      if (d < 0) -1L
+      else (a | (b << 8) | (c << 16) | (d.toLong << 24)) & 0xffffffffL
+    }
 }

@@ -14,6 +14,9 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path => HPath}
 trait SeekableInput extends AutoCloseable {
   def length: Long
 
+  /** The file's name in error messages. */
+  def name: String = getClass.getSimpleName
+
   /** Read up to `len` bytes at absolute position `pos`; returns bytes read,
     * -1 at EOF. */
   def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int
@@ -32,6 +35,7 @@ trait SeekableInput extends AutoCloseable {
 }
 
 final class LocalFileInput(path: String) extends SeekableInput {
+  override def name: String = path
   private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
   override val length: Long = ch.size()
   override def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int =
@@ -39,8 +43,8 @@ final class LocalFileInput(path: String) extends SeekableInput {
   override def close(): Unit = ch.close()
 }
 
-final class HadoopInput(in: FSDataInputStream, override val length: Long)
-    extends SeekableInput {
+final class HadoopInput(in: FSDataInputStream, override val length: Long,
+                        override val name: String) extends SeekableInput {
   override def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int =
     in.read(pos, buf, off, len)
   override def close(): Unit = in.close()
@@ -54,6 +58,6 @@ object SeekableInput {
     else {
       val p = new HPath(path)
       val fs = FileSystem.get(p.toUri, conf)
-      new HadoopInput(fs.open(p), fs.getFileStatus(p).getLen)
+      new HadoopInput(fs.open(p), fs.getFileStatus(p).getLen, path)
     }
 }

@@ -1,12 +1,12 @@
 package graft.bam.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.bam.check.Checker
 import graft.bam.codec.Pos
-import graft.bam.ds.{Bai, BamDataSource}
+import graft.bam.ds.{Bai, BamDataSource, BamScan}
 import graft.bam.io.{BlockReader, SeekableInput}
 
 /** Auxiliary BAM relations + the differential-checker pipeline — the
@@ -153,33 +153,39 @@ object BamOps {
     finally w.close()
   }
 
-  /** Per-position checker calls: explode every uncompressed position of
-    * every block and evaluate the eager + relaxed checkers. One
-    * `BlockReader`+`Checker` pair per partition, closed on task end —
-    * the reference's CallPartition pattern (cli/.../CallPartition.scala:34-53)
-    * as `mapPartitions` over a range-partitioned block catalog. */
-  def checkerCalls(spark: SparkSession, path: String, numPartitions: Int = 8): DataFrame = {
+  /** Runs `f` on every block of the catalog, range-partitioned by start:
+    * one `BlockReader` and `Checker` per task, closed when the task ends
+    * — the reference's CallPartition pattern
+    * (cli/.../CallPartition.scala:34-53). `f` gets the reader, the checker
+    * and the block's start and uncompressed size. */
+  private[ops] def blockTasks[T: Encoder](spark: SparkSession, path: String, numPartitions: Int)(
+      f: (BlockReader, Checker, Long, Int) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
     val contigLens = readContigLens(path)
-    val blockMetas = blocks(spark, path)
-      .repartitionByRange(numPartitions, col("start"))
-      .as[(Long, Int, Int)]
     val conf = BamDataSource.serializableConf()
-    blockMetas.mapPartitions { metas =>
-      if (!metas.hasNext) Iterator.empty
-      else {
-        val blocks = new BlockReader(SeekableInput.open(path, conf.value))
-        val checker = new Checker(blocks, contigLens)
-        org.apache.spark.TaskContext.get() match {
-          case null => // driver-side (tests): rely on GC
-          case tc => tc.addTaskCompletionListener[Unit](_ => blocks.close())
+    blocks(spark, path).repartitionByRange(numPartitions, col("start"))
+      .as[(Long, Int, Int)]
+      .mapPartitions { metas =>
+        if (!metas.hasNext) Iterator.empty
+        else {
+          val blocks = new BlockReader(SeekableInput.open(path, conf.value))
+          val checker = new Checker(blocks, contigLens)
+          // driver-side (tests) there is no task: rely on GC
+          Option(org.apache.spark.TaskContext.get())
+            .foreach(_.addTaskCompletionListener[Unit](_ => blocks.close()))
+          metas.flatMap { case (start, _, usize) => f(blocks, checker, start, usize) }
         }
-        metas.flatMap { case (start, _, usize) =>
-          (0 until usize).iterator.map { off =>
-            val p = Pos(start, off)
-            (start, off, checker.eager(p), checker.relaxed(p))
-          }
-        }
+      }
+  }
+
+  /** Per-position checker calls: every uncompressed position of every
+    * block, with the eager and relaxed checkers' verdicts. */
+  def checkerCalls(spark: SparkSession, path: String, numPartitions: Int = 8): DataFrame = {
+    import spark.implicits._
+    blockTasks(spark, path, numPartitions) { (_, checker, start, usize) =>
+      (0 until usize).iterator.map { off =>
+        val p = Pos(start, off)
+        (start, off, checker.eager(p), checker.relaxed(p))
       }
     }.toDF("blockPos", "offset", "eagerCall", "relaxedCall")
   }
@@ -209,28 +215,10 @@ object BamOps {
   def checkBlocks(spark: SparkSession, path: String,
                   numPartitions: Int = 8): DataFrame = {
     import spark.implicits._
-    val contigLens = readContigLens(path)
-    val conf = BamDataSource.serializableConf()
-    val eager = blocks(spark, path)
-      .repartitionByRange(numPartitions, col("start"))
-      .as[(Long, Int, Int)]
-      .mapPartitions { metas =>
-        if (!metas.hasNext) Iterator.empty
-        else {
-          val blocks = new BlockReader(SeekableInput.open(path, conf.value))
-          val checker = new Checker(blocks, contigLens)
-          org.apache.spark.TaskContext.get() match {
-            case null =>
-            case tc => tc.addTaskCompletionListener[Unit](_ => blocks.close())
-          }
-          metas.map { case (start, _, _) =>
-            graft.bam.check.FindRecordStart(blocks, checker, start) match {
-              case Some(p) => (start, p.blockPos, p.offset)
-              case None => (start, -1L, -1)
-            }
-          }
-        }
-      }.toDF("start", "eagerBlock", "eagerOffset")
+    val eager = blockTasks(spark, path, numPartitions) { (blocks, checker, start, _) =>
+      val p = graft.bam.check.FindRecordStart(blocks, checker, start)
+      Iterator.single((start, p.fold(-1L)(_.blockPos), p.fold(-1)(_.offset)))
+    }.toDF("start", "eagerBlock", "eagerOffset")
     // truth: first record position at-or-after each block start, filled
     // backward from the per-block minima. Two-phase distributed fill
     // (graft.ops.ScalableWindow) — a bare Window.orderBy here would drag
@@ -318,13 +306,6 @@ object BamOps {
   }
 
   /** Header contig dictionary: (name, length) in refIdx order. */
-  def readContigs(path: String): IndexedSeq[(String, Int)] = {
-    val blocks = new BlockReader(
-      SeekableInput.open(path, BamDataSource.hadoopConf()))
-    try {
-      val r = new graft.bam.io.UncompressedReader(blocks)
-      r.seek(Pos(0, 0))
-      graft.bam.codec.Bam.readHeader(r).contigs.map(c => c.name -> c.length)
-    } finally blocks.close()
-  }
+  def readContigs(path: String): IndexedSeq[(String, Int)] =
+    BamScan.header(path).contigs.map(c => c.name -> c.length)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 
 import graft.bam.codec.{Bam, Bgzf}
-import graft.bam.ds.{BamDataSource, BamSchema}
+import graft.bam.ds.{BamDataSource, BamScan, BamSchema}
 
 /** BAM writer sink (S16, the htsjdk-rewrite analog,
   * cli/.../bam/rewrite/HTSJDKRewrite.scala:21-93).
@@ -137,14 +137,7 @@ object BamSink {
         (clip(lo), clip(hi))
       }
     }
-    val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(inPath))
-    val header =
-      try {
-        val r = new graft.bam.io.UncompressedReader(blocks)
-        r.seek(graft.bam.codec.Pos(0, 0))
-        Bam.readHeader(r)
-      } finally blocks.close()
-    write(reads(), header, outPath, keep)
+    write(reads(), BamScan.header(inPath), outPath, keep)
     if (indexBlocks) BamOps.indexBlocks(spark, outPath, outPath + ".blocks")
     if (indexRecords) BamOps.indexRecords(spark, outPath, outPath + ".records")
     if (index) BamOps.indexBai(spark, outPath)

@@ -3,9 +3,7 @@ package graft.bam.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.bam.check.Checker
 import graft.bam.codec.Pos
-import graft.bam.io.{BlockReader, SeekableInput}
 
 /** full-check (§2.11): run the flag-collecting checker at every uncompressed
   * position and aggregate the error-flag structure — the reference's
@@ -22,32 +20,14 @@ object FullCheckOps {
     * with the 19 flag booleans (all-false = valid record start). */
   def fullCalls(spark: SparkSession, path: String, numPartitions: Int = 8): DataFrame = {
     import spark.implicits._
-    val contigLens = BamOps.readContigLens(path)
-    val conf = graft.bam.ds.BamDataSource.serializableConf()
-    val blockMetas = BamOps.blocks(spark, path)
-      .repartitionByRange(numPartitions, col("start"))
-      .as[(Long, Int, Int)]
-    blockMetas.mapPartitions { metas =>
-      if (!metas.hasNext) Iterator.empty
-      else {
-        val blocks = new BlockReader(SeekableInput.open(path, conf.value))
-        val checker = new Checker(blocks, contigLens)
-        org.apache.spark.TaskContext.get() match {
-          case null =>
-          case tc => tc.addTaskCompletionListener[Unit](_ => blocks.close())
-        }
-        metas.flatMap { case (start, _, usize) =>
-          (0 until usize).iterator.map { off =>
-            checker.full(Pos(start, off)) match {
-              case None => (start, off, true, 0,
-                Array.empty[String], 0)
-              case Some(f) =>
-                (start, off, false, f.numNonZeroFields,
-                  flagNames.zip(f.setFields)
-                    .collect { case (n, true) => n }.toArray,
-                  f.readsBeforeError)
-            }
-          }
+    BamOps.blockTasks(spark, path, numPartitions) { (_, checker, start, usize) =>
+      (0 until usize).iterator.map { off =>
+        checker.full(Pos(start, off)) match {
+          case None => (start, off, true, 0, Array.empty[String], 0)
+          case Some(f) =>
+            (start, off, false, f.numNonZeroFields,
+              flagNames.zip(f.setFields).collect { case (n, true) => n }.toArray,
+              f.readsBeforeError)
         }
       }
     }.toDF("blockPos", "offset", "ok", "numFlags", "flags", "readsBeforeError")

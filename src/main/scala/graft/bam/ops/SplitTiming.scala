@@ -2,9 +2,9 @@ package graft.bam.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.bam.check.{Checker, FindBlockStart, FindRecordStart}
+import graft.bam.check.{FindRecordStart, SplitStart}
 import graft.bam.codec.{Bam, Pos}
-import graft.bam.io.{BlockReader, SeekableInput, UncompressedReader}
+import graft.bam.io.{BlockReader, SeekableInput}
 import graft.util.Stats
 
 /** The reference's headline benchmark apps — compute-splits, compare-splits
@@ -30,33 +30,23 @@ object SplitTiming {
                           eagerMS: Long, relaxedMS: Long)
 
   /** Sequential in-task split computation for one file: resolve every
-    * byte-range boundary to the first record start at-or-after it, exactly
-    * as the DSv2 reader does (BamPartitionReader.init), with the checker
-    * profile pluggable. Returns distinct split-start positions. */
+    * byte-range boundary to its first record by [[SplitStart]], the rule
+    * the DSv2 reader uses, with the checker profile pluggable. Returns
+    * distinct split-start positions; an unreadable header fails naming
+    * the path. */
   def computeSplits(path: String, splitSize: Long, relaxed: Boolean,
                     blocksToCheck: Int = 5, readsToCheck: Int = 10,
-                    maxReadSize: Int = 1 << 20,
+                    maxReadSize: Int = FindRecordStart.MaxReadSize,
                     conf: org.apache.hadoop.conf.Configuration =
                       new org.apache.hadoop.conf.Configuration()): Vector[Pos] = {
     val blocks = new BlockReader(SeekableInput.open(path, conf))
     try {
-      val hr = new UncompressedReader(blocks)
-      if (!hr.seek(Pos(0, 0))) return Vector.empty
-      val header = Bam.readHeader(hr)
-      val checker = new Checker(blocks, header.contigs.map(_.length), readsToCheck)
-      val accept: Pos => Boolean =
-        if (relaxed) checker.relaxed _ else checker.eager _
+      val splitStart = new SplitStart(blocks, Bam.readHeader(blocks, path), relaxed,
+        blocksToCheck, readsToCheck, maxReadSize)
       val len = blocks.fileLength
-      (0L until len by splitSize).iterator.flatMap { s =>
-        val e = math.min(s + splitSize, len)
-        if (s == 0) Some(header.firstRecord)
-        else {
-          val bs = FindBlockStart(blocks, s, blocksToCheck)
-          if (bs >= e) None
-          else FindRecordStart(blocks, accept, bs, maxReadSize)
-            .filter(_.blockPos < e)
-        }
-      }.toVector.distinct.sorted
+      (0L until len by splitSize).iterator
+        .flatMap(s => splitStart(s, math.min(s + splitSize, len)))
+        .toVector.distinct.sorted
     } finally blocks.close()
   }
 
